@@ -46,16 +46,10 @@ object Cli {
     }.getOrElse(sys.env.getOrElse("GRAFT_REGISTRY_DIR",
       sys.props("user.home") + "/.graft/schemas")))
 
-  private def session(): SparkSession = SparkSession.builder()
-    .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-    .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    Session.builder(s"local[$cpus]", cpus, "cli_").getOrCreate()
+  }
 
   def main(args: Array[String]): Unit = args.toList match {
     case "list-queries" :: Nil =>

@@ -64,18 +64,8 @@ object ClusterCheck {
   private def fingerprint(df: DataFrame): Fp = Fingerprint.of(df)
 
   private def session(master: String, extra: Map[String, String]): SparkSession = {
-    val b = SparkSession.builder()
-      .master(master)
+    val b = Session.builder(master, 8, s"cc_${master.takeWhile(_ != '[')}_")
       .appName(s"graft-cluster-check")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_cc_${ProcessHandle.current.pid}_${master.takeWhile(_ != '[')}")
-      .config("spark.ui.enabled", "false")
     extra.foreach { case (k, v) => b.config(k, v) }
     b.getOrCreate()
   }

@@ -2,8 +2,6 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Fingerprint.Fp
 
 /** Concurrent-query invariance audit main: the full registered surface
@@ -39,19 +37,9 @@ object ConcurrencyCheck {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nThreads = args.lift(1).map(_.toInt).getOrElse(4)
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
+    val spark = Session.builder("local[8]", 8, "cq_")
       .appName("graft-concurrency-check")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_cq_${ProcessHandle.current.pid}")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

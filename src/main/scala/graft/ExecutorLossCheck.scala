@@ -73,27 +73,18 @@ object ExecutorLossCheck {
     val addOpens = Jvm.addOpensString
     val absClasspath = Jvm.absoluteClasspath
 
-    def session(tag: String): SparkSession = SparkSession.builder()
-      .master("local-cluster[2,4,2048]")
-      .appName(s"graft-executor-loss-$tag")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.executor.extraClassPath", absClasspath)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.executor.memory", "2g")
-      // lost-shuffle recovery must win within the run: generous retry
-      // budget, short locality waits so resubmitted tasks land anywhere
-      .config("spark.task.maxFailures", "8")
-      .config("spark.stage.maxConsecutiveAttempts", "8")
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_el_${ProcessHandle.current.pid}_$tag")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    def session(tag: String): SparkSession =
+      Session.builder("local-cluster[2,4,2048]", 8, s"el_${tag}_")
+        .appName(s"graft-executor-loss-$tag")
+        .config("spark.executor.extraClassPath", absClasspath)
+        .config("spark.executor.extraJavaOptions", addOpens)
+        .config("spark.executor.memory", "2g")
+        // lost-shuffle recovery must win within the run: generous retry
+        // budget, short locality waits so resubmitted tasks land anywhere
+        .config("spark.task.maxFailures", "8")
+        .config("spark.stage.maxConsecutiveAttempts", "8")
+        .config("spark.locality.wait", "0")
+        .getOrCreate()
 
     // ---- Phase 1: undisturbed reference run ----
     val ref = session("ref")

@@ -33,18 +33,8 @@ import graft.Fingerprint.Fp
 object InterpCheck {
 
   private def session(flipped: Boolean, mode: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[8]")
+    val b = Session.builder("local[8]", 8, s"ic_${flipped}_")
       .appName("graft-interp-check")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_ic_${ProcessHandle.current.pid}_$flipped")
-      .config("spark.ui.enabled", "false")
     if (flipped) mode match {
       case "noaqe" =>
         b.config("spark.sql.adaptive.enabled", "false")

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: `explain("formatted")` output for representative
   * queries, so the physical plans (pushdown, pruning, broadcast, codegen
   * spans) can be reviewed without running anything. */
@@ -71,16 +69,7 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder("local[4]", 4, "plans_").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Debug arm: `Plans <sfDir> <queryName>` prints ONE query's EXECUTED
     // plan (post-AQE — what actually ran, not what was proposed) to

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Operational audit main: prove "results survive task retries
@@ -37,15 +36,9 @@ object RetryCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4, 2]") // 2 attempts: first-attempt failures retry
+    // 2 attempts: first-attempt failures retry
+    val spark = Session.builder("local[4, 2]", 4, "rc_")
       .appName("graft-retry-check")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR") // injected failures WARN loudly
     import spark.implicits._

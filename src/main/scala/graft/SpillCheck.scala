@@ -61,18 +61,8 @@ object SpillCheck {
     "dd8_shingle_dupfrac", "tx9_tfidf", "g1_pagerank")
 
   private def session(forceSpill: Boolean): SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
+    val b = Session.builder("local[4]", 4, s"sp_${forceSpill}_")
       .appName("graft-spill-check")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_sp_${ProcessHandle.current.pid}_$forceSpill")
-      .config("spark.ui.enabled", "false")
     if (forceSpill) {
       b.config("spark.shuffle.spill.numElementsForceSpillThreshold", "500")
         .config("spark.sql.windowExec.buffer.spill.threshold", "128")

@@ -71,19 +71,10 @@ object StreamCrashCheck {
 
   // ---------------------------------------------------------------- child
 
-  private def childSession(): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-stream-crash-child")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      s"/tmp/graft_warehouse_scc_${ProcessHandle.current.pid}")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private def childSession(): SparkSession =
+    Session.builder("local[4]", 4, "scc_")
+      .appName("graft-stream-crash-child")
+      .getOrCreate()
 
   /** Stage events as 8 single-file jobs in strictly increasing mod-time
     * order (FileStreamSource orders by mod time), so every fresh run of

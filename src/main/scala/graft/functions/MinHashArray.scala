@@ -21,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * seeds) that is the difference [[MinHashSig]] was built for, kept
   * here WITHOUT the TypedImperativeAggregate execution path whose
   * sort-based fallback serializes per-row buffers (the 18 GB gen-sf10
-  * spill LshScaleCheck measured). The per-doc minima over this array
-  * are taken by plain declarative `min` columns — codegen'd
+  * spill in records/LSHSCALE_legacy_r14.jsonl). The per-doc minima over
+  * this array are taken by plain declarative `min` columns — codegen'd
   * HashAggregate with a fixed-width buffer — in
   * [[graft.operators.DedupOps.wideSignatureBands]].
   *

@@ -6,8 +6,7 @@ package graft.model
   * naming the knob and the offending value. Knobs exist to override a
   * default deliberately; a typo silently reverting to that default is
   * the one failure mode they must not have (a salt width of 0 would
-  * degenerate the shuffle layout, a CapK of 0 would silently empty a
-  * relation — neither should ever pass parsing).
+  * degenerate the shuffle layout — it must never pass parsing).
   */
 object Knob {
 

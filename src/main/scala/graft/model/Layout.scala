@@ -12,9 +12,8 @@ import org.apache.spark.sql.SparkSession
   * allocation: it reflects currently-registered executor cores and can be
   * tiny right after startup, which would silently bake a narrow layout.
   * Deployments therefore pin the width explicitly via the
-  * `SPARK_GRAFT_LAYOUT_BUCKETS` env knob (mirroring
-  * SPARK_GRAFT_SHUFFLE_PARTS in the audit mains); defaultParallelism is
-  * only the fallback.
+  * `SPARK_GRAFT_LAYOUT_BUCKETS` env knob; defaultParallelism is only the
+  * fallback.
   */
 object Layout {
   val EnvKnob = "SPARK_GRAFT_LAYOUT_BUCKETS"

@@ -244,7 +244,7 @@ object DedupOps extends OpModule {
     *    serializes one ~1 KB `long[numHashes]` buffer PER INPUT ROW
     *    into its external sorter, which at gen-sf10 measured 18.1 GB of
     *    spill and a ×1.55 super-linear step on ×3.33 data
-    *    (LshScaleCheck; the round-13 dd14 finding);
+    *    (records/LSHSCALE_legacy_r14.jsonl; the round-13 dd14 finding);
     *  - band keys are PURE column expressions over the wide row
     *    (`rowsPerBand` "seed:mh" strings per band, sorted and joined),
     *    so the old posexplode→(|docs|×numHashes rows)→collect_list
@@ -415,10 +415,10 @@ object DedupOps extends OpModule {
     // the 4-hash fixture miniature. Bands come from the WIDE
     // declarative plan ([[wideSignatureBands]]): 128 codegen'd mins
     // over doc_id-partitioned rows, band keys as pure expressions —
-    // the round-14 re-plan after LshScaleCheck measured the one-pass
-    // TypedImperativeAggregate's sort-based fallback spilling 18 GB at
-    // gen-sf10 (value-identical; LshSpec pins all three signature
-    // forms against each other).
+    // the round-14 re-plan after the one-pass TypedImperativeAggregate's
+    // sort-based fallback spilled 18 GB at gen-sf10
+    // (records/LSHSCALE_legacy_r14.jsonl; value-identical, LshSpec pins
+    // all three signature forms against each other).
     // The band relation is persisted (family convention — lshBands/
     // cappedLshBands are Cached too): candidatePairs self-joins it, and
     // an unpersisted side would recompute the whole signature aggregate

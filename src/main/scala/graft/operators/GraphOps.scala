@@ -335,11 +335,11 @@ object GraphOps extends OpModule {
     * inheriting the corpus-sized session setting. The session setting is
     * the CEILING — at scale (stats ≫ cores × target, or an unmaterialized
     * cache whose join-chain estimate is huge) behavior is unchanged and
-    * AQE still coalesces. Measured at sf0.1/local[32] (MetricsCheck,
-    * r19): g5 steady 7.5-8.3 s at 32 initial partitions vs 4.4-4.6 s at
-    * 8, shuffle bytes 46.6 → 20.1 MB — the same graph-sized-rounds
-    * argument dd15's componentsOf makes with its fixed 8, made
-    * scale-adaptive. */
+    * AQE still coalesces. Measured at sf0.1/local[32]
+    * (records/QMETRICS_g_roundsized_r19.jsonl): g5 steady 7.5-8.3 s at
+    * 32 initial partitions vs 4.4-4.6 s at 8, shuffle bytes 46.6 → 20.1
+    * MB — the same graph-sized-rounds argument dd15's componentsOf makes
+    * with its fixed 8, made scale-adaptive. */
   private val RoundPartitionBytes = BigInt(16L << 20)
   private[graft] def roundPartitions(s: SparkSession, rel: DataFrame): Int = {
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt

@@ -495,8 +495,8 @@ object SimilarityOps extends OpModule {
   /** PQ codebook: the subvectors of the `anchors` lowest-vec_id anchors
     * (a deterministic stand-in for a k-means codebook — the
     * assignment/search algebra is identical). The registered nn13/nn14
-    * queries use the default 16; AnnRecallCheck's quantization-loss
-    * axis also measures 256 (the codebook-resolution arm — a 16-entry
+    * queries use the default 16; the recorded quantization-loss axis
+    * also measures 256 (the codebook-resolution arm — a 16-entry
     * codebook cannot rank within a planted cluster, see
     * records/QMETRICS_nn_recall_curve_r18.jsonl). */
   private[graft] def pqCodebook(e: DataFrame, anchors: Int = 16): DataFrame =

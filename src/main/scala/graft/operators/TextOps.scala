@@ -43,22 +43,9 @@ object TextOps extends OpModule {
     * pairs per doc. 16 is small enough to bind on the sf ≥ 0.01
     * fixtures (per-doc distinct tokens run into the twenties), which
     * keeps the cap path itself inside the oracle gate rather than a
-    * dead branch that only wakes at gen scale. Env-overridable
-    * (SPARK_GRAFT_TX19_CAPK) for the cost-model sensitivity A/B — the
-    * override flows through BOTH the Spark plan and the generated
-    * oracle SQL (and the [[Cached]] key), so an off-default arm is
-    * still oracle-comparable; the registered default stays 16.
-    *
-    * Binding is OBJECT-INIT-TIME (a `val`): the knob is read once when
-    * TextOps first loads, so it must be set before the first query
-    * registration in the JVM — a later env change cannot rebind it.
-    * That is deliberate: one JVM = one CapK keeps every query build,
-    * its oracle SQL, and the [[Cached]] key mutually consistent for
-    * the whole process. Parsing is validated ([[graft.model.Knob]]):
-    * a typo or a degenerate value (0 would silently empty the capped
-    * relation) fails loudly instead of falling back. */
-  private[operators] val CapK =
-    graft.model.Knob.posInt("SPARK_GRAFT_TX19_CAPK", 16)
+    * dead branch that only wakes at gen scale. The same constant feeds
+    * the Spark plan, the generated oracle SQL and the [[Cached]] key. */
+  private[operators] val CapK = 16
 
   /** tx15 regime threshold: the pushdown arm is chosen when at least
     * this fraction of presence rows (doc, word pairs) belongs to words
@@ -79,37 +66,28 @@ object TextOps extends OpModule {
   private val tx15Arm =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Boolean]
 
-  /** Decide tx15's pair-join input arm for this corpus: explicit env
-    * override first (validated — only "1"/"0" parse), otherwise the
-    * rare-df presence-mass statistic computed from the cached wc
-    * relation (one vocab-sized aggregate; at 100 TB nobody hand-sets a
-    * per-corpus env var, so the plan choice must come from the data —
-    * the reference derives behavior from data the same way,
-    * tileconfig.py:443-497). */
+  /** Decide tx15's pair-join input arm for this corpus from the rare-df
+    * presence-mass statistic computed from the cached wc relation (one
+    * vocab-sized aggregate; at 100 TB nobody hand-sets a per-corpus
+    * switch, so the plan choice must come from the data — the reference
+    * derives behavior from data the same way, tileconfig.py:443-497). */
   private def tx15Pushdown(s: SparkSession, dir: String,
-      wc: DataFrame): Boolean =
-    sys.env.get("SPARK_GRAFT_TX15_PUSHDOWN") match {
-      case Some("1") => true
-      case Some("0") => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_TX15_PUSHDOWN must be 1 or 0, got '$other'")
-      case None =>
-        tx15Arm.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-        tx15Arm.getOrElseUpdate((s, dir), {
-          val row = wc.agg(
-            (sum(when(col("c") < 50, col("c")).otherwise(lit(0L)))
-              / sum(col("c"))).as("rare_mass")).collect()(0)
-          val mass = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-          val pick = mass >= Tx15RareMassMin
-          System.err.println(String.format(java.util.Locale.ROOT,
-            "[graft] tx15 regime for %s: rare-df presence mass %.4f %s " +
-              "%.2f -> %s arm (override via SPARK_GRAFT_TX15_PUSHDOWN)",
-            dir, Double.box(mass), if (pick) ">=" else "<",
-            Double.box(Tx15RareMassMin),
-            if (pick) "pushdown" else "direct"))
-          pick
-        })
-    }
+      wc: DataFrame): Boolean = {
+    tx15Arm.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
+    tx15Arm.getOrElseUpdate((s, dir), {
+      val row = wc.agg(
+        (sum(when(col("c") < 50, col("c")).otherwise(lit(0L)))
+          / sum(col("c"))).as("rare_mass")).collect()(0)
+      val mass = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
+      val pick = mass >= Tx15RareMassMin
+      System.err.println(String.format(java.util.Locale.ROOT,
+        "[graft] tx15 regime for %s: rare-df presence mass %.4f %s %.2f -> %s arm",
+        dir, Double.box(mass), if (pick) ">=" else "<",
+        Double.box(Tx15RareMassMin),
+        if (pick) "pushdown" else "direct"))
+      pick
+    })
+  }
 
   /** Exploded non-empty whitespace tokens per doc — shared persisted
     * relation ([[Cached]]): tx1/tx2/tx3 and PipelineOps.pp1 all aggregate
@@ -438,8 +416,7 @@ object TextOps extends OpModule {
       // presence mass from the cached wc relation — a pure function of
       // the data, so the chosen plan is deterministic per corpus and the
       // oracle gate stays stable (both arms are result-identical by
-      // construction). SPARK_GRAFT_TX15_PUSHDOWN=1/0 remains an explicit
-      // override for operators who have already measured their corpus.
+      // construction).
       val pairIn =
         if (tx15Pushdown(s, dir, wc)) {
           val frequent = broadcast(wc.filter(col("c") >= 50).select("w"))

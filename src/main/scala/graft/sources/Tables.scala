@@ -27,9 +27,10 @@ object Tables {
   def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
   /** events.parquet stores TIMESTAMP(NANOS), which Spark 4 only reads as
-    * LongType under spark.sql.legacy.parquet.nanosAsLong (set in every
-    * session we create). Convert back to a microsecond TimestampType here
-    * — the data is µs-resolution, so no precision is lost. */
+    * LongType under the legacy parquet `nanosAsLong` flag (set by the
+    * shared [[graft.Session]] builder). Convert back to a microsecond
+    * TimestampType here — the data is µs-resolution, so no precision is
+    * lost. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val raw = table(spark, dir, "events")
     if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)

@@ -121,7 +121,8 @@ class DataGenSpec extends SparkSpec {
     // the --clustered contract: intra-label cosine ≈ α = 0.75, inter ≈ 0,
     // norms still unit (the marginal stays standard normal per dim) —
     // while the default isotropic mode shows NO label structure. Both
-    // properties are what AnnRecallCheck's two-regime curve leans on.
+    // properties are what the two-regime recall curve in
+    // records/QMETRICS_nn_recall_curve_r18.jsonl leans on.
     val dir2 = java.nio.file.Files.createTempDirectory("graft_datagen_clu").toString
     DataGen.generate(spark, 0.001, dir2, clustered = true)
     def meanCos(path: String): (Double, Double) = {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Pins the executed-plan-harvest lesson that cost round 17 a debugging
-  * detour (MetricsCheck.scala): `df.count()` plans its OWN
+  * detour: `df.count()` plans its OWN
   * QueryExecution, so `df.queryExecution.executedPlan` is a plan that
   * never ran — under AQE it stays `isFinalPlan=false` forever, and
   * grepping it for skew marks (or printing it as "the" plan) reads

@@ -89,6 +89,31 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("Session.builder carries the shared setup every main relies on") {
+    // the one builder every main uses; extensions must attach even on
+    // the SparkContext the other suites already started
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    val s = Session.builder("local[2]", 2, "session_spec_").getOrCreate()
+    try {
+      import org.apache.spark.sql.types.TimestampType
+      val events = graft.sources.Tables.events(s, "/root/testdata/sf0.001")
+      assert(events.schema("ts").dataType == TimestampType, events.schema)
+      val dot = s.sql("SELECT vector_dot(array(1D, 2D), array(3D, 4D)) AS d")
+      assert(dot.head().getDouble(0) == 11.0)
+      assert(dot.queryExecution.analyzed.toString.contains("vectordot"),
+        dot.queryExecution.analyzed.toString)
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    } finally {
+      SparkSession.clearDefaultSession()
+      SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
   test("spatial SQL surface: st_relate_rect / st_covers_rect / rect_de9im") {
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession

@@ -5,11 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Knob
 
 /** Contract for validated numeric env knobs ([[Knob.posInt]] — the
-  * Layout rule generalized, now also behind SPARK_GRAFT_J13_SALT and
-  * SPARK_GRAFT_TX19_CAPK): unset falls back, valid wins, set-but-invalid
-  * raises NAMING the knob. Salt 0 or CapK 0 are silent degenerations
-  * (divide-by-nothing shuffle layout / an emptied relation), so zero and
-  * negatives must fail parsing, never reach the operator. */
+  * Layout rule generalized, now also behind SPARK_GRAFT_J13_SALT):
+  * unset falls back, valid wins, set-but-invalid raises NAMING the knob.
+  * A salt of 0 is a silent degeneration (a divide-by-nothing shuffle
+  * layout), so zero and negatives must fail parsing, never reach the
+  * operator. */
 class KnobSpec extends AnyFunSuite {
 
   test("unset knob takes the default") {

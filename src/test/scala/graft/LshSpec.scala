@@ -112,8 +112,8 @@ class LshSpec extends SparkSpec {
     // The scale defect this plan exists to avoid: ObjectHashAggregate
     // falls back to sort-based aggregation at 128 map keys and then
     // serializes one agg buffer PER INPUT ROW into its external sorter
-    // (18 GB of spill at gen-sf10, LshScaleCheck). The production
-    // query must plan as codegen'd HashAggregate only.
+    // (18 GB of spill at gen-sf10, records/LSHSCALE_legacy_r14.jsonl).
+    // The production query must plan as codegen'd HashAggregate only.
     val plan = SparkEntry.queries("dd14_minhash_production")(spark, Sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("ObjectHashAggregate"),
