@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.Fingerprint.Fp
-
 /** Multi-JVM execution audit main: run a representative query suite
   * under `local-cluster[2,4,2048]` — TWO REAL EXECUTOR JVMs, separate
   * from the driver — and pin the results byte-identical to the same
@@ -47,8 +43,18 @@ object ClusterCheck {
     * (o2), retry loop (o3), UDTF explode (f5), binary multimodal
     * batches (mm1), streaming state + sinks (st1/st2), window/sort
     * shapes (w1/ds13), networked JDBC read/write from executor JVMs
-    * through the graft.jdbc proxy (s1/k5 — round 13; previously the two
-    * documented exclusions), and a plain wide agg as control (q1). */
+    * (s1/k5), and a plain wide agg as control (q1).
+    *
+    * s1/k5 reach Derby through the graft.jdbc TCP proxy: embedded Derby
+    * is single-JVM by design (db.lck), so a forked executor opening the
+    * same on-disk store failed — the first full-surface run caught
+    * exactly that (220/222), the kind of single-JVM-only assumption
+    * this gate exists to expose. The sandbox ships no derbynet/
+    * derbyclient, so the gate JVM hosts graft.jdbc's socket server and
+    * every executor JVM opens real network JDBC connections to it — the
+    * same topology as the reference's PostgreSQL deployment
+    * (db.py:17-77). The full-surface and driver-heap-bounded runs are
+    * recorded in records/ and BENCH_NOTES.md. */
   val Suite: Seq[String] = Seq(
     "q1_pricing_summary", "a1_envelope_union", "a19_heavy_hitters",
     "ds5_topk_agg", "j12_bloom_prune", "dd14_minhash_production",
@@ -61,126 +67,34 @@ object ClusterCheck {
     "w1_rank_files", "ds13_curriculum_order",
     "s1_jdbc_pushdown", "k5_jdbc_roundtrip")
 
-  private def fingerprint(df: DataFrame): Fp = Fingerprint.of(df)
-
-  private def session(master: String, extra: Map[String, String]): SparkSession = {
-    val b = Session.builder(master, 8, s"cc_${master.takeWhile(_ != '[')}_")
-      .appName(s"graft-cluster-check")
-    extra.foreach { case (k, v) => b.config(k, v) }
-    b.getOrCreate()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // `all`: gate the ENTIRE query surface, not just the representative
-    // serialization suite. Every query is deterministic by construction
-    // (the DuckDB oracle hash-checks them), so exact-fingerprint parity
-    // is well-defined for all of them — since round 13 with ZERO
-    // exclusions. Through round 12 the two JDBC queries had to be
-    // skipped: embedded Derby is single-JVM by design (db.lck), so a
-    // forked executor attempting the same on-disk store failed — the
-    // first full-surface run caught exactly that (220/222), which is
-    // the kind of single-JVM-only assumption this gate exists to
-    // expose. S1/K5 now reach Derby through graft.jdbc's TCP proxy
-    // (the sandbox ships no derbynet/derbyclient, so Derby's own
-    // network-server mode was unavailable): the gate JVM hosts the
-    // socket server, and every executor JVM opens real network JDBC
-    // connections to it — the same topology as the reference's
-    // PostgreSQL deployment (db.py:17-77).
-    val suite: Seq[String] =
-      if (args.lift(1).exists(Set("all", "driverheap"))) SparkEntry.queries.keys.toSeq.sorted
-      else Suite
-
-    // `driverheap`: the resource PROOF behind "no driver-side
-    // materialization". The grep claim (no .collect() in operator hot
-    // paths) is code review; this converts it to physics — the full
-    // surface executes with the DRIVER JVM deliberately tiny (the
-    // launcher sets -Xmx1g; asserted below so a fat-heap run can't
-    // masquerade) while the real work runs in the two forked 2 GiB
-    // executor JVMs. Run it against a generated sf1 corpus and any
-    // query that secretly collects a corpus-sized relation (a
-    // driver-side loop, an unbounded collect_list to the driver, a
-    // broadcast of a fact table) dies on the spot instead of surviving
-    // review. Single phase, zero failures required; fingerprint parity
-    // is the `all` mode's job.
-    if (args.lift(1).contains("driverheap")) {
-      val maxHeapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-      require(maxHeapMb <= 1536,
-        s"driverheap mode must run under -Xmx1g (saw ${maxHeapMb}MB) — " +
-          "a roomy driver heap proves nothing")
-      val spark = session("local-cluster[2,4,2048]", Map(
-        "spark.executor.extraClassPath" -> Jvm.absoluteClasspath,
-        "spark.executor.extraJavaOptions" -> Jvm.addOpensString,
-        "spark.executor.memory" -> "2g"))
-      spark.sparkContext.setLogLevel("ERROR")
-      val errs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-      var done = 0
-      suite.foreach { name =>
-        try { SparkEntry.queries(name)(spark, sfDir).count(); done += 1 }
-        catch { case e: Throwable =>
-          errs(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        }
-      }
-      graft.sources.Cached.releaseAll()
-      spark.stop()
-      val failedArr = errs.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
-      println(s"""{"metric":"driver_heap_bound","ok":$done,"total":${suite.size},"driver_max_heap_mb":$maxHeapMb,"failed":$failedArr,"errors":${Json.obj(errs)},"sf":"$sfDir"}""")
-      if (errs.nonEmpty) sys.exit(1)
-      return
-    }
 
     // Executor JVMs need the graft classes and the JDK17 module opens;
     // ship the launching JVM's own classpath and opens verbatim.
-    val addOpens = Jvm.addOpensString
     // ABSOLUTE paths only (Jvm.absoluteClasspath): executors run from
     // the Spark work dir, so a relative `target/scala-2.13/classes`
     // entry silently resolves to nothing there — the first actual
     // multi-JVM defect this main caught was its own harness shipping a
     // relative classpath (SerializedLambda ClassCastExceptions on every
     // Scala closure).
-    val absClasspath = Jvm.absoluteClasspath
     val clusterConf = Map(
-      "spark.executor.extraClassPath" -> absClasspath,
-      "spark.executor.extraJavaOptions" -> addOpens,
+      "spark.executor.extraClassPath" -> Jvm.absoluteClasspath,
+      "spark.executor.extraJavaOptions" -> Jvm.addOpensString,
       // 2 workers x 4 cores x 2 GiB: small enough to coexist with the
       // harness, large enough that every shuffle/broadcast really
       // crosses process boundaries between two executor backends.
       "spark.executor.memory" -> "2g")
 
-    def runPhase(master: String, extra: Map[String, String]): (Map[String, Fp], Map[String, String]) = {
-      val spark = session(master, extra)
-      spark.sparkContext.setLogLevel("ERROR")
-      val fps = scala.collection.mutable.LinkedHashMap.empty[String, Fp]
-      val errs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-      suite.foreach { name =>
-        try fps(name) = fingerprint(SparkEntry.queries(name)(spark, sfDir))
-        catch { case e: Throwable =>
-          errs(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        }
-      }
-      graft.sources.Cached.releaseAll()
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      (fps.toMap, errs.toMap)
-    }
-
+    def run(master: String, extra: Map[String, String]) = Parity.phase(
+      Session.builder(master, 8, s"cc_${master.takeWhile(_ != '[')}_")
+        .appName("graft-cluster-check").config(extra), _ => ())(
+      (s, _) => Parity.fingerprints(s, Suite, sfDir))._1
     // Phase 1: the REAL multi-JVM run (2 executor processes).
-    val (clusterFps, clusterErrs) = runPhase("local-cluster[2,4,2048]", clusterConf)
+    val cluster = run("local-cluster[2,4,2048]", clusterConf)
     // Phase 2: the in-process reference.
-    val (localFps, localErrs) = runPhase("local[8]", Map.empty)
-
-    val mismatched = suite.filter(q =>
-      clusterFps.get(q).isDefined && localFps.get(q).isDefined &&
-        clusterFps(q) != localFps(q))
-    val failed = (clusterErrs.keySet ++ localErrs.keySet).toSeq.sorted
-    val matched = suite.count(q =>
-      clusterFps.get(q).isDefined && clusterFps.get(q) == localFps.get(q))
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val errDetail = Json.obj(scala.collection.mutable.LinkedHashMap(
-      (clusterErrs.map { case (k, v) => s"cluster:$k" -> v } ++
-        localErrs.map { case (k, v) => s"local:$k" -> v }).toSeq: _*))
-    println(s"""{"metric":"cluster_parity","matched":$matched,"total":${suite.size},"mismatched":${arr(mismatched)},"failed":${arr(failed)},"errors":$errDetail,"sf":"$sfDir"}""")
-    if (mismatched.nonEmpty || failed.nonEmpty) sys.exit(1)
+    val local = run("local[8]", Map.empty)
+    Parity.report("cluster_parity", Suite, sfDir, "cluster" -> cluster, "local" -> local,
+      Seq.empty, proofOk = true)
   }
 }

@@ -1,11 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-
-import graft.Fingerprint.Fp
 
 /** Executor-LOSS audit main: under `local-cluster[2,4,2048]`, kill one
   * of the two REAL executor JVMs (SIGKILL the CoarseGrainedExecutor-
@@ -28,10 +26,10 @@ import graft.Fingerprint.Fp
   * construction (DuckDB-oracled), so exact fingerprint parity is the
   * right contract.
   *
-  * Kill choreography per query: a stage-completion listener arms after
-  * the FIRST stage of the query's own job completes (so the victim
-  * executor owns shuffle outputs some later stage must fetch), then a
-  * watcher thread SIGKILLs one live executor backend process. The gate
+  * Kill choreography per query: once re-armed, a stage-completion
+  * listener SIGKILLs one live executor backend process when the FIRST
+  * stage of the query's own job completes (so the victim executor owns
+  * shuffle outputs some later stage must fetch). The gate
   * requires (a) at least one kill actually happened while queries ran,
   * and (b) at least one task-end with a non-success reason OR a stage
   * resubmission was observed — proving the loss was felt, not absorbed
@@ -67,112 +65,67 @@ object ExecutorLossCheck {
     }.toSeq
   }
 
+  private def session(tag: String): SparkSession.Builder =
+    Session.builder("local-cluster[2,4,2048]", 8, s"el_${tag}_")
+      .appName(s"graft-executor-loss-$tag")
+      .config("spark.executor.extraClassPath", Jvm.absoluteClasspath)
+      .config("spark.executor.extraJavaOptions", Jvm.addOpensString)
+      .config("spark.executor.memory", "2g")
+      // lost-shuffle recovery must win within the run: generous retry
+      // budget, short locality waits so resubmitted tasks land anywhere
+      .config("spark.task.maxFailures", "8")
+      .config("spark.stage.maxConsecutiveAttempts", "8")
+      .config("spark.locality.wait", "0")
+
+  /** The kill phase's listener: kills one executor per [[rearm]] and
+    * records whether the loss was felt. */
+  private final class Killer extends SparkListener {
+    val kills, nonSuccess, resubmits = new AtomicInteger(0)
+    // ONE kill per query: the first kill exhausts the budget until the
+    // driver re-arms it for the next query — continuous slaughter would
+    // murder every relaunched executor and exhaust the stage-attempt
+    // budget (the first run of this gate did exactly that: 90 kills,
+    // every job dead at 8 attempts).
+    private val budget = new AtomicInteger(0)
+    def rearm(): Unit = budget.set(1)
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      // a stage attempt beyond 0 is the DAGScheduler resubmitting
+      // after lost shuffle output — the other way a felt loss shows
+      if (s.stageInfo.attemptNumber() > 0) resubmits.incrementAndGet()
+      // a stage has completed: its map outputs now live on the
+      // executors, including the victim. Kill whichever backend is
+      // alive; the worker relaunches a replacement, which must
+      // re-register from scratch
+      if (budget.getAndSet(0) > 0)
+        executorBackends().headOption.foreach { ph =>
+          if (ph.destroyForcibly()) kills.incrementAndGet()
+        }
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (!t.reason.toString.startsWith("Success")) nonSuccess.incrementAndGet()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
 
-    val addOpens = Jvm.addOpensString
-    val absClasspath = Jvm.absoluteClasspath
-
-    def session(tag: String): SparkSession =
-      Session.builder("local-cluster[2,4,2048]", 8, s"el_${tag}_")
-        .appName(s"graft-executor-loss-$tag")
-        .config("spark.executor.extraClassPath", absClasspath)
-        .config("spark.executor.extraJavaOptions", addOpens)
-        .config("spark.executor.memory", "2g")
-        // lost-shuffle recovery must win within the run: generous retry
-        // budget, short locality waits so resubmitted tasks land anywhere
-        .config("spark.task.maxFailures", "8")
-        .config("spark.stage.maxConsecutiveAttempts", "8")
-        .config("spark.locality.wait", "0")
-        .getOrCreate()
-
     // ---- Phase 1: undisturbed reference run ----
-    val ref = session("ref")
-    ref.sparkContext.setLogLevel("ERROR")
-    val refErrs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val refFps = Suite.flatMap { q =>
-      try Some(q -> Fingerprint.of(SparkEntry.queries(q)(ref, sfDir)))
-      catch { case e: Throwable =>
-        refErrs(q) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-      }
-    }.toMap
-    graft.sources.Cached.releaseAll()
-    ref.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    val (ref, _) = Parity.phase(session("ref"), _ => ())(
+      (s, _) => Parity.fingerprints(s, Suite, sfDir))
 
     // ---- Phase 2: same queries, one executor SIGKILLed mid-query ----
-    val spark = session("kill")
-    spark.sparkContext.setLogLevel("ERROR")
-    val kills = new AtomicInteger(0)
-    val nonSuccess = new AtomicInteger(0)
-    val resubmits = new AtomicInteger(0)
-    val armed = new AtomicBoolean(false)
-    // ONE kill per query: the first kill attempt exhausts the budget
-    // until the driver re-arms it for the next query — continuous
-    // slaughter would murder every relaunched executor and exhaust the
-    // stage-attempt budget (the first run of this gate did exactly
-    // that: 90 kills, every job dead at 8 attempts).
-    val killBudget = new AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        // a stage attempt beyond 0 is the DAGScheduler resubmitting
-        // after lost shuffle output — the other way a felt loss shows
-        if (s.stageInfo.attemptNumber() > 0) resubmits.incrementAndGet()
-        // arm the killer once a stage has completed: its map outputs
-        // now live on the executors, including the victim
-        armed.set(true)
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (!t.reason.toString.startsWith("Success")) nonSuccess.incrementAndGet()
-    })
-    val killer = new Thread(() => {
-      while (!Thread.currentThread().isInterrupted) {
-        try {
-          if (armed.getAndSet(false) && killBudget.getAndUpdate(b => math.max(0, b - 1)) > 0) {
-            // kill whichever backend is alive; the worker relaunches a
-            // replacement, which must re-register from scratch
-            executorBackends().headOption.foreach { ph =>
-              if (ph.destroyForcibly()) kills.incrementAndGet()
-            }
-          }
-          Thread.sleep(100)
-        } catch { case _: InterruptedException => Thread.currentThread().interrupt() }
-      }
-    }, "graft-executor-killer")
-    killer.setDaemon(true)
-    killer.start()
+    val (kill, k) = Parity.phase(session("kill"),
+      s => { val k = new Killer; s.sparkContext.addSparkListener(k); k })(
+      (s, k) => Suite.map { q => k.rearm(); Parity.fingerprints(s, Seq(q), sfDir) }
+        .reduce(_ ++ _))
 
-    val errs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val killFps = Suite.flatMap { q =>
-      armed.set(false)
-      killBudget.set(1)
-      try Some(q -> Fingerprint.of(SparkEntry.queries(q)(spark, sfDir)))
-      catch { case e: Throwable =>
-        errs(q) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        None
-      }
-    }.toMap
-    killer.interrupt()
-    graft.sources.Cached.releaseAll()
-    spark.stop()
-
-    val mismatched = Suite.filter(q =>
-      refFps.get(q).isDefined && killFps.get(q).isDefined &&
-        refFps(q) != killFps(q))
-    val matched = Suite.count(q =>
-      refFps.get(q).isDefined && killFps.get(q) == refFps.get(q))
-    val failed = (refErrs.keySet ++ errs.keySet).toSeq.sorted
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val errDetail = Json.obj(scala.collection.mutable.LinkedHashMap(
-      (refErrs.map { case (k, v) => s"ref:$k" -> v } ++
-        errs.map { case (k, v) => s"kill:$k" -> v }).toSeq: _*))
     // felt = the loss was observable in the scheduler (a lost/failed
     // task OR a resubmitted stage), not a no-op kill
-    val felt = nonSuccess.get() > 0 || resubmits.get() > 0
-    println(s"""{"metric":"executor_loss_parity","matched":$matched,"total":${Suite.size},"kills":${kills.get()},"non_success_tasks":${nonSuccess.get()},"stage_resubmits":${resubmits.get()},"mismatched":${arr(mismatched)},"failed":${arr(failed)},"errors":$errDetail,"sf":"$sfDir"}""")
-    if (mismatched.nonEmpty || failed.nonEmpty || kills.get() == 0 || !felt)
-      sys.exit(1)
+    val felt = k.nonSuccess.get() > 0 || k.resubmits.get() > 0
+    Parity.report("executor_loss_parity", Suite, sfDir, "ref" -> ref, "kill" -> kill,
+      Seq("kills" -> k.kills.get().toString,
+        "non_success_tasks" -> k.nonSuccess.get().toString,
+        "stage_resubmits" -> k.resubmits.get().toString),
+      k.kills.get() > 0 && felt)
   }
 }

@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MapType
 
 /** Order-independent exact result fingerprint shared by the execution-
-  * invariance gates ([[ClusterCheck]] — multi-JVM, [[SpillCheck]] —
-  * forced-spill, [[InterpCheck]], [[ExecutorLossCheck]]): row count +
+  * invariance gates (through [[Parity]]: [[ClusterCheck]] — multi-JVM,
+  * [[SpillCheck]] — forced-spill, [[InterpCheck]], [[ExecutorLossCheck]],
+  * [[ConcurrencyCheck]]; directly: [[RetryCheck]], [[StreamCrashCheck]])
+  * and the benchmark's per-job checks: row count +
   * bit_xor + wrapping SUM of xxhash64 over all columns. Exactness is
   * the point: the gated queries are deterministic by construction (the
   * DuckDB oracle hash-checks them), so ANY bit of divergence between

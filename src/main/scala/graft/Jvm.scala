@@ -1,11 +1,12 @@
 package graft
 
-/** The JDK-17 module opens Spark needs, in ONE place. Consumed by every
-  * harness that forks a JVM (executor JVMs in ClusterCheck /
-  * ExecutorLossCheck, the gate subprocesses in the test specs via
-  * GateLauncher) — previously copy-pasted in seven locations, where the
-  * next JDK module addition would have had to land seven times. The
-  * shell-side copy lives in tools/graft_java.sh. */
+/** The JDK-17 module opens Spark needs and the forked-JVM command line,
+  * in ONE place. Consumed by every harness that forks a JVM (executor
+  * JVMs in ClusterCheck / ExecutorLossCheck, StreamCrashCheck's child
+  * JVMs, the gate subprocesses in the test specs via GateLauncher) —
+  * previously copy-pasted in seven locations, where the next JDK module
+  * addition would have had to land seven times. The shell-side copy
+  * lives in tools/graft_java.sh. */
 object Jvm {
   val OpenedModules: Seq[String] = Seq(
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
@@ -29,4 +30,13 @@ object Jvm {
       .filter(_.nonEmpty)
       .map(p => new java.io.File(p).getAbsolutePath)
       .mkString(":")
+
+  /** argv for a child JVM running `mainClass` on this JVM's classpath
+    * with the module opens and a `heap` (-Xmx) of the caller's choice. */
+  def command(heap: String, mainClass: String, args: Seq[String]): Seq[String] = {
+    val javaBin = new java.io.File(
+      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
+    (Seq(javaBin) ++ addOpensArgs ++ Seq(s"-Xmx$heap", "-cp", absoluteClasspath,
+      mainClass) ++ args).toIndexedSeq
+  }
 }

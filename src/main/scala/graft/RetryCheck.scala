@@ -13,26 +13,15 @@ import org.apache.spark.sql.functions._
   * pipeline over the events table in a `local[4, 2]` session (2 task
   * attempts) with a mapPartitions stage that THROWS on the first
   * attempt of every even-numbered partition — so half the stage's
-  * tasks really do fail and re-run — and compares an order-independent
-  * exact fingerprint (per-row xxhash64 folded with bit_xor, plus exact
-  * row count and integer value sum) against the same pipeline with no
-  * injection. Any divergence under retry (lost rows, duplicated rows,
+  * tasks really do fail and re-run — and compares the order-independent
+  * exact [[Fingerprint]] (row count, bit_xor and wrapping sum of per-row
+  * xxhash64) against the same pipeline with no injection. Any divergence under retry (lost rows, duplicated rows,
   * reordered nondeterministic arithmetic) changes the fingerprint.
   *
-  * Usage: runMain graft.RetryCheck [sfDir]   (prints one JSON line)
+  * Usage: runMain graft.RetryCheck [sfDir]   (prints one JSON line;
+  * ExecutorLossSpec launches it as a subprocess).
   */
 object RetryCheck {
-
-  private case class Fp(n: Long, xor: Long, sum: Long)
-
-  private def fingerprint(df: org.apache.spark.sql.DataFrame): Fp = {
-    val r = df
-      .agg(count(lit(1)).as("n"),
-        expr("bit_xor(xxhash64(user_id, event_type, cnt, sv))").as("x"),
-        sum("sv").cast("long").as("s"))
-      .collect()(0)
-    Fp(r.getLong(0), r.getLong(1), r.getLong(2))
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -41,7 +30,6 @@ object RetryCheck {
       .appName("graft-retry-check")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR") // injected failures WARN loudly
-    import spark.implicits._
 
     // proof the failure path actually executed: a listener counting
     // FAILED task attempts (an accumulator cannot — Spark discards
@@ -81,21 +69,17 @@ object RetryCheck {
             .as("sv"))
     }
 
-    val clean = fingerprint(pipeline(inject = false))
-    val before = failedTasks.get()
-    val retried = fingerprint(pipeline(inject = true))
-    // listener events are posted asynchronously; poll briefly for the
-    // expected failure events (the bus drain API is private[spark])
-    val deadline = System.nanoTime() + 5_000_000_000L
-    while (failedTasks.get() == before && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    val nFailed = failedTasks.get() - before
+    val clean = Fingerprint.of(pipeline(inject = false))
+    val retried = Fingerprint.of(pipeline(inject = true))
+    // listener events are posted asynchronously; stop() drains the bus,
+    // so the count is complete after it
+    spark.stop()
+    val nFailed = failedTasks.get()
     val ok = clean == retried && nFailed > 0
     println(s"""{"metric":"retry_invariance","match":$ok,""" +
       s""""injected_failures":$nFailed,""" +
       s""""rows":${clean.n},"xor":${clean.xor},"sum":${clean.sum},""" +
       s""""rows_retry":${retried.n},"xor_retry":${retried.xor},"sum_retry":${retried.sum}}""")
-    spark.stop()
     if (!ok) sys.exit(1)
   }
 }

@@ -1,9 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-
-import graft.Fingerprint.Fp
 
 /** Forced-spill execution audit main: run a spill-prone query suite
   * twice — once in a normal session, once with every external-sorter /
@@ -60,65 +60,40 @@ object SpillCheck {
     "a1_envelope_union", "a19_heavy_hitters", "dd14_minhash_production",
     "dd8_shingle_dupfrac", "tx9_tfidf", "g1_pagerank")
 
-  private def session(forceSpill: Boolean): SparkSession = {
+  private def session(forceSpill: Boolean): SparkSession.Builder = {
     val b = Session.builder("local[4]", 4, s"sp_${forceSpill}_")
       .appName("graft-spill-check")
-    if (forceSpill) {
+    if (forceSpill)
       b.config("spark.shuffle.spill.numElementsForceSpillThreshold", "500")
         .config("spark.sql.windowExec.buffer.spill.threshold", "128")
         .config("spark.sql.sessionWindow.buffer.spill.threshold", "128")
         .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold", "128")
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "64")
         .config("spark.sql.TungstenAggregate.testFallbackStartsAt", "300,700")
-    }
-    b.getOrCreate()
+    else b
+  }
+
+  /** Registers a TaskEnd listener summing memory + disk spill bytes;
+    * complete once the phase has stopped the context. */
+  private def spillCounter(spark: SparkSession): AtomicLong = {
+    val spilled = new AtomicLong(0L)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        if (m != null) spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+      }
+    })
+    spilled
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-
-    def runPhase(forceSpill: Boolean): (Map[String, Fp], Map[String, String], Long) = {
-      val spark = session(forceSpill)
-      spark.sparkContext.setLogLevel("ERROR")
-      val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new SparkListener {
-        override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val fps = scala.collection.mutable.LinkedHashMap.empty[String, Fp]
-      val errs = scala.collection.mutable.LinkedHashMap.empty[String, String]
-      Suite.foreach { name =>
-        try fps(name) = Fingerprint.of(SparkEntry.queries(name)(spark, sfDir))
-        catch { case e: Throwable =>
-          errs(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        }
-      }
-      graft.sources.Cached.releaseAll()
-      // listener events drain asynchronously; stop() flushes the bus
-      // before tearing it down, so the counter is complete after this
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      (fps.toMap, errs.toMap, spilled.get())
-    }
-
-    val (normalFps, normalErrs, _) = runPhase(forceSpill = false)
-    val (spillFps, spillErrs, spilledBytes) = runPhase(forceSpill = true)
-
-    val mismatched = Suite.filter(q =>
-      normalFps.get(q).isDefined && spillFps.get(q).isDefined &&
-        normalFps(q) != spillFps(q))
-    val failed = (normalErrs.keySet ++ spillErrs.keySet).toSeq.sorted
-    val matched = Suite.count(q =>
-      normalFps.get(q).isDefined && normalFps.get(q) == spillFps.get(q))
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val errDetail = Json.obj(scala.collection.mutable.LinkedHashMap(
-      (normalErrs.map { case (k, v) => s"normal:$k" -> v } ++
-        spillErrs.map { case (k, v) => s"spill:$k" -> v }).toSeq: _*))
-    println(s"""{"metric":"spill_parity","matched":$matched,"total":${Suite.size},"spilled_bytes":$spilledBytes,"mismatched":${arr(mismatched)},"failed":${arr(failed)},"errors":$errDetail,"sf":"$sfDir"}""")
-    if (mismatched.nonEmpty || failed.nonEmpty || spilledBytes == 0L) sys.exit(1)
+    def run(forceSpill: Boolean) = Parity.phase(session(forceSpill), spillCounter)(
+      (s, _) => Parity.fingerprints(s, Suite, sfDir))
+    val (normal, _) = run(forceSpill = false)
+    val (spill, spilled) = run(forceSpill = true)
+    val spilledBytes = spilled.get()
+    Parity.report("spill_parity", Suite, sfDir, "normal" -> normal, "spill" -> spill,
+      Seq("spilled_bytes" -> spilledBytes.toString), spilledBytes > 0L)
   }
 }

@@ -212,12 +212,8 @@ object StreamCrashCheck {
 
   private def launchChild(shape: String, sfDir: String, work: String,
       killAtMarker: Option[java.nio.file.Path]): ChildRun = {
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val cmd = (Seq(javaBin) ++ Jvm.addOpensArgs ++ Seq(
-      "-Xmx4g", "-cp", Jvm.absoluteClasspath,
-      "graft.StreamCrashCheck", "child", shape, sfDir, work)).toIndexedSeq
-    val pb = new ProcessBuilder(cmd: _*)
+    val pb = new ProcessBuilder(Jvm.command("4g", "graft.StreamCrashCheck",
+      Seq("child", shape, sfDir, work)): _*)
     val errFile = java.io.File.createTempFile("graft_scc", ".err")
     errFile.deleteOnExit()
     pb.redirectError(errFile)
@@ -295,8 +291,7 @@ object StreamCrashCheck {
     val detail = results.map { case (sh, _, killed, _, mid, o, c) =>
       s""""$sh":{"kill_exit":${killed.exit},"offsets":$o,"commits":$c,"mid_batch":$mid}"""
     }.mkString("{", ",", "}")
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"stream_crash_parity","matched":$matched,"total":${Suite.size},"mismatched":${arr(mismatched)},"not_mid_batch":${arr(notMid)},"failed":${arr(failed)},"detail":$detail,"sf":"$sfDir"}""")
+    println(s"""{"metric":"stream_crash_parity","matched":$matched,"total":${Suite.size},"mismatched":${Json.arr(mismatched)},"not_mid_batch":${Json.arr(notMid)},"failed":${Json.arr(failed)},"detail":$detail,"sf":${Json.str(sfDir)}}""")
     if (matched != Suite.size) sys.exit(1)
   }
 }

@@ -249,38 +249,19 @@ object JoinOps extends OpModule {
           count(lit(1)).as("n_items"))
     }),
 
-    // J13 (extension) — SALTED SKEW JOIN behind the gate: the explicit
-    // fallback for keys so hot that even AQE's split shuffle blocks
-    // overwhelm one reducer ([[SkewJoin.saltedJoin]] — big side salted
-    // n ways, small side replicated n ways, join on (key, salt)).
-    // The salt only changes the SHUFFLE LAYOUT, never the result — which
-    // is exactly what this gate entry proves: the oracle is the plain
-    // unsalted join, and every salt width (including the registered
-    // default, the unsalted n=1 arm) must reproduce it. The per-user first-event dimension is |users|-sized
-    // (the dimension-vs-fact shape where one whale user would otherwise
-    // pin a reducer); n_first_events can only be right if every fact row
-    // met its user's dimension row exactly once through the salt fan-out.
+    // J13 (extension) — SKEW JOIN on the dimension-vs-fact shape, where
+    // one whale user would pin a reducer. The plain join relies on AQE's
+    // runtime skew split (salting ×8 cost ×1.9 total shuffle for a
+    // 3.6×→1.5× balance gain, records/QMETRICS_zipf10_skew_r17.jsonl).
+    // j13's countDistinct(user_id) reuses the join's partitioning, so
+    // OptimizeSkewedJoin may decline the split; [[SkewJoin.saltedJoin]]
+    // is the fallback for that case, and SkewJoinSpec and PipelineOpsSpec
+    // pin it equal to this join on j13's fixture.
     "j13_salted_join" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
         .select("user_id", "event_type", "ts")
       val firstTs = ev.groupBy("user_id").agg(min("ts").as("first_ts"))
-      // Salt width, env-overridable (validated — salt 0 would be a
-      // silent degeneration) with n=1 as the UNSALTED arm (plain join).
-      // Default flipped to 1 in round 18 on round 17's own wire
-      // measurement (records/QMETRICS_zipf10_skew_r17.jsonl): salting ×8
-      // bought a 3.6×→1.5× reducer-balance gain at ×1.9 TOTAL shuffle
-      // (the replicated dimension), while AQE's skew split handles a
-      // 100 TB-sized hub partition at runtime for free once it crosses
-      // the default thresholds — so the registered plan, the one a
-      // reader copies, is unsalted-with-AQE, and the salt stays the
-      // explicit fallback. The fallback is not hypothetical: j13's own
-      // aggregate fuses a countDistinct(user_id) onto the join key,
-      // which lets the distinct merge reuse the join's partitioning and
-      // makes OptimizeSkewedJoin (correctly) decline the split
-      // (SkewJoinSpec pins this) — a whale hot enough to overwhelm that
-      // regime is exactly when SPARK_GRAFT_J13_SALT=8 earns its ×1.9.
-      val saltN = graft.model.Knob.posInt("SPARK_GRAFT_J13_SALT", 1)
-      SkewJoin.saltedJoin(ev, firstTs, "user_id", saltN)
+      ev.join(firstTs, Seq("user_id"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           countDistinct("user_id").as("n_users"),

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * them concurrently, where the process-global build-once state
   * (Cached's persisted relations, BuildOnce layouts, fixture writers,
   * the JDBC proxy server) is exactly what races. [[ConcurrencyCheck]]
-  * work-steals the surface across 4 workers (session clone per worker,
+  * work-steals the surface across its 4 workers (session clone per worker,
   * FAIR scheduler pools) and pins exact fingerprint parity; the gate
   * also fails if the measured peak concurrency never reached 2 — a
   * quietly serialized run proves nothing.
@@ -18,7 +18,7 @@ class ConcurrencySpec extends AnyFunSuite {
 
   test("full surface, 4 queries in flight: concurrent == sequential, byte-identical") {
     val r = GateLauncher.run("graft.ConcurrencyCheck",
-      Seq("/root/testdata/sf0.001", "4"), "concurrency_parity")
+      Seq("/root/testdata/sf0.001"), "concurrency_parity")
     assert(r.line.contains("\"mismatched\":[]"), r.line)
     assert(r.line.contains("\"failed\":[]"), r.line)
     assert(r.line.contains(s""""matched":${SparkEntry.queries.size}"""), r.line)

@@ -18,6 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Subprocess for the usual one-context-per-JVM reason — and because
   * the killer must see the executor backends as ITS process descendants.
+  *
+  * The task-failure half of the recovery story runs here too:
+  * [[RetryCheck]] fails the first attempt of half a stage's tasks and
+  * pins the retried result's fingerprint to the uninjected run.
   */
 class ExecutorLossSpec extends AnyFunSuite {
 
@@ -28,5 +32,14 @@ class ExecutorLossSpec extends AnyFunSuite {
     assert(r.line.contains("\"failed\":[]"), r.line)
     assert(r.line.contains(s""""matched":${ExecutorLossCheck.Suite.size}"""), r.line)
     assert(!r.line.contains("\"kills\":0,"), s"no executor was killed: ${r.line}")
+  }
+
+  test("task retries: injected first-attempt failures, result unchanged") {
+    // no sfDir argument: RetryCheck's default corpus is sf0.01
+    val r = GateLauncher.run("graft.RetryCheck", Seq.empty, "retry_invariance")
+    assert(r.line.contains("\"match\":true"), r.line)
+    val injected = """"injected_failures":(\d+)""".r
+      .findFirstMatchIn(r.line).get.group(1).toLong
+    assert(injected > 0, s"no task failure was injected: ${r.line}")
   }
 }

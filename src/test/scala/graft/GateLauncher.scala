@@ -1,24 +1,18 @@
 package graft
 
 /** Shared subprocess launcher for the execution-regime gate specs
-  * (LocalClusterSpec, SpillSpec, InterpSpec, ExecutorLossSpec — each
-  * needs a fresh JVM because one JVM holds one SparkContext and the
-  * sibling suites share a live session). Launches a graft main with the
-  * JDK opens + this JVM's classpath, drains stdout, tails stderr to a
+  * (LocalClusterSpec, SpillSpec, InterpSpec, ExecutorLossSpec,
+  * ConcurrencySpec, StreamCrashSpec — each needs a fresh JVM because one
+  * JVM holds one SparkContext and the sibling suites share a live
+  * session). Launches a graft main through [[Jvm.command]] (JDK opens +
+  * this JVM's classpath, 8 GiB heap), drains stdout, tails stderr to a
   * temp file (a pipe would deadlock under Spark's log volume), and
   * returns the last line carrying the expected metric. */
 object GateLauncher {
   final case class GateRun(exit: Int, line: String)
 
   def run(mainClass: String, args: Seq[String], metric: String): GateRun = {
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val cmd = (Seq(javaBin) ++ Jvm.addOpensArgs ++ Seq(
-      "-Xmx8g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", sys.props("java.class.path"),
-      mainClass) ++ args).toIndexedSeq
-    val pb = new ProcessBuilder(cmd: _*)
+    val pb = new ProcessBuilder(Jvm.command("8g", mainClass, args): _*)
     pb.directory(new java.io.File("."))
     pb.environment().put("SPARK_HOME",
       sys.env.getOrElse("SPARK_HOME", "/opt/spark"))

@@ -9,19 +9,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * PointInPoly, NfcNormalize) is two implementations of one semantics,
   * and Spark's own builtins have the same duality; codegen fallbacks
   * (wide schemas, huge methods) make the interpreted path a production
-  * path at scale. [[InterpCheck]] runs the expression-risk suite under
+  * path at scale. [[InterpCheck]] runs its expression-risk suite under
   * `spark.sql.codegen.factoryMode=NO_CODEGEN` + `wholeStage=false` and
   * pins exact fingerprint parity with the compiled run, proving the
   * regime flip via the `*(n)` markers in the executed flagship plan.
-  * The full-surface runs (interp 227/227, AQE-off 227/227 via the
-  * `noaqe` mode) are the recorded audits in BENCH_NOTES; this spec
-  * keeps the quick subset green in CI.
+  * The full-surface runs (interp 227/227, AQE-off 227/227) are recorded
+  * audits in records/ and BENCH_NOTES.md; this spec keeps the
+  * expression-risk suite green in CI.
   */
 class InterpSpec extends AnyFunSuite {
 
   test("expression-risk suite: interpreted == codegen, byte-identical, regime proven") {
     val r = GateLauncher.run("graft.InterpCheck",
-      Seq("/root/testdata/sf0.001", "quick"), "interp_parity")
+      Seq("/root/testdata/sf0.001"), "interp_parity")
     assert(r.line.contains("\"mismatched\":[]"), r.line)
     assert(r.line.contains("\"failed\":[]"), r.line)
     assert(r.line.contains("\"regime_ok\":true"), r.line)
@@ -30,7 +30,7 @@ class InterpSpec extends AnyFunSuite {
   /** minhash_array has two genuinely separate execution paths —
     * `nullSafeEval` (interpreted) and `doGenCode` (a compiled call into
     * the static helper, including the UnaryExpression null plumbing the
-    * generator emits around it). The quick parity gate above covers it
+    * generator emits around it). The parity gate above covers it
     * end-to-end (dd14/dd2 sit in ClusterCheck.Suite); this test names
     * the expression explicitly and flips both paths in-process,
     * including the null-input branch the end-to-end queries never hit

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.Knob
 
 /** Contract for validated numeric env knobs ([[Knob.posInt]] — the
-  * Layout rule generalized, now also behind SPARK_GRAFT_J13_SALT):
+  * Layout rule generalized):
   * unset falls back, valid wins, set-but-invalid raises NAMING the knob.
   * A salt of 0 is a silent degeneration (a divide-by-nothing shuffle
   * layout), so zero and negatives must fail parsing, never reach the

@@ -11,9 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * serialization mechanism) under `local-cluster[2,4,2048]` — two real
   * forked executor JVMs — and pins each result's order-independent
   * exact fingerprint equal to the in-process `local[8]` run. The
-  * full-surface run (`all` mode, 225/225 with the two embedded-Derby
-  * exclusions documented in ClusterCheck) is the recorded audit in
-  * BENCH_NOTES; this spec keeps the representative suite green in CI.
+  * full-surface runs (zero exclusions since the graft.jdbc proxy) and
+  * the driver-heap-bounded run are recorded audits in records/ and
+  * BENCH_NOTES.md; this spec keeps the representative suite green in CI.
   *
   * Subprocess because one JVM can hold only one SparkContext and this
   * suite's siblings share a live local[4] context; SPARK_HOME /
