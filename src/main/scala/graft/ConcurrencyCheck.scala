@@ -18,18 +18,18 @@ import org.apache.spark.sql.SparkSession
   * in flight.
   *
   * Why this exists: every other gate runs queries one at a time, but a
-  * shared engine serves them concurrently — and the process-global
-  * build-once state is exactly what races: [[graft.sources.Cached]]'s
-  * persisted relations (shingles/tokens/bands feeding the whole dedup
-  * and text families), [[graft.model.BuildOnce]] layouts (nn15's
-  * partitioned IVF dir, g6's bucketed table), the DSv2 fixture writers,
+  * shared engine serves them concurrently — and the shared build-once
+  * state is exactly what races: [[graft.sources.Cached]]'s persisted
+  * relations (shingles/tokens/bands feeding the whole dedup and text
+  * families) and build-once layouts (nn15's partitioned IVF dir, g6's
+  * and k15's bucketed tables), the DSv2 fixture writers,
   * the JDBC proxy server's connection handling, and concurrent
   * streaming queries sharing one context. A lost-update in any of them
   * would serve a partial layout to a query that then returns silently
   * wrong rows — at 100 TB, to a tenant.
   *
   * Determinism note: per-worker session CLONES (`newSession()`) share
-  * the context, catalog, and all process-global state above, but
+  * the context, catalog, cache manager and all the state above, but
   * isolate SQLConf — required because the streaming harness temporarily
   * retunes shuffle partitions per query (MonitorStream.runToTable), a
   * session-level mutation no real concurrent deployment would share
@@ -49,7 +49,7 @@ object ConcurrencyCheck {
       .config("spark.scheduler.mode", "FAIR")
 
   /** Work-stealing over a deterministic-but-shuffled order (hash of the
-    * name), so families that share Cached/BuildOnce state (dd*, tx*,
+    * name), so families that share Cached state (dd*, tx*,
     * nn*, g*) get split ACROSS workers instead of running back-to-back
     * on one — maximizing real concurrent contact with shared state.
     * `peak` records the most queries ever in flight at once. */

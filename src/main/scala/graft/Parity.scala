@@ -37,14 +37,19 @@ object Parity {
     * (which drains the listener bus, so counters a hook registered are
     * complete afterwards) and clear the active and default sessions so
     * the next phase builds a fresh one. Returns the body's run and the
-    * hook's value. */
+    * hook's value. A relation still cached after `Cached.releaseAll()`
+    * fails the run: a leak no fingerprint shows. */
   def phase[A](builder: SparkSession.Builder, hook: SparkSession => A)(
       body: (SparkSession, A) => Run): (Run, A) = {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val a = hook(spark)
-      (body(spark, a), a)
+      val run = body(spark, a)
+      graft.sources.Cached.releaseAll()
+      (if (spark.sharedState.cacheManager.isEmpty) run
+       else run ++ Run(Map.empty, Map("cache_invariant" ->
+         "relations still cached after Cached.releaseAll()")), a)
     } finally {
       graft.sources.Cached.releaseAll()
       spark.stop()

@@ -18,10 +18,11 @@ object Session {
 
   /** @param master       Spark master URL
     * @param cores        shuffle partitions (the cores the master runs on)
-    * @param warehouseTag prefix of the PID-suffixed warehouse directory
-    *                     `/tmp/graft_warehouse_<tag><pid>`: concurrent JVMs
-    *                     (and differently-tagged sessions in one JVM)
-    *                     never share a warehouse */
+    * @param warehouseTag suffix of the warehouse directory
+    *                     `warehouse_<tag>` under the process's scratch root
+    *                     ([[graft.model.Fs.root]]): concurrent JVMs (and
+    *                     differently-tagged sessions in one JVM) never
+    *                     share a warehouse */
   def builder(master: String, cores: Int,
       warehouseTag: String): SparkSession.Builder =
     SparkSession.builder()
@@ -33,6 +34,6 @@ object Session {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_$warehouseTag${ProcessHandle.current.pid}")
+        new java.io.File(graft.model.Fs.root, s"warehouse_$warehouseTag").getPath)
       .config("spark.ui.enabled", "false")
 }

@@ -214,8 +214,7 @@ object StreamCrashCheck {
       killAtMarker: Option[java.nio.file.Path]): ChildRun = {
     val pb = new ProcessBuilder(Jvm.command("4g", "graft.StreamCrashCheck",
       Seq("child", shape, sfDir, work)): _*)
-    val errFile = java.io.File.createTempFile("graft_scc", ".err")
-    errFile.deleteOnExit()
+    val errFile = java.io.File.createTempFile("scc", ".err", graft.model.Fs.root)
     pb.redirectError(errFile)
     val proc = pb.start()
     killAtMarker match {
@@ -226,6 +225,8 @@ object StreamCrashCheck {
         Thread.sleep(100) // let the batch get its output mid-write
         proc.destroyForcibly()
         proc.waitFor()
+        // a killed JVM runs no exit hook: remove its scratch root here
+        graft.model.Fs.deleteRecursively(graft.model.Fs.rootOf(proc.pid))
         ChildRun(proc.exitValue(), None)
       case None =>
         val out = new String(proc.getInputStream.readAllBytes(),
@@ -262,7 +263,7 @@ object StreamCrashCheck {
       return
     }
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val root = s"/tmp/graft_scc_${ProcessHandle.current.pid}"
+    val root = graft.model.Fs.scratch("scc", sfDir)
 
     val results = Suite.map { shape =>
       // Phase 1: undisturbed reference run

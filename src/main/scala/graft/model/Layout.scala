@@ -29,13 +29,13 @@ object Layout {
     Knob.posInt(EnvKnob, s.sparkContext.defaultParallelism, env)
 
   /** Collision-free identifier component for a corpus directory, used in
-    * per-(process, corpus) layout table/dir names. Sanitizing alone is
-    * lossy — "/data/sf0.1" and "/data/sf0_1" both map to "_data_sf0_1",
-    * and BuildOnce's invalidUnless only checks table EXISTENCE, so the
-    * second corpus would silently join the first corpus's layout. The
-    * appended MD5 prefix of the RAW string keeps two distinct dirs on
-    * distinct layouts; deterministic across JVMs (unlike String.hashCode
-    * which is only *currently* stable, MD5 is specified). */
+    * per-corpus layout table names and scratch dir names ([[Fs]]).
+    * Sanitizing alone is lossy — "/data/sf0.1" and "/data/sf0_1" both
+    * map to "_data_sf0_1", so the second corpus would silently read the
+    * first corpus's layout. The appended MD5 prefix of the RAW string
+    * keeps two distinct dirs on distinct layouts; deterministic across
+    * JVMs (unlike String.hashCode, which is 32 bits and only *currently*
+    * stable, MD5 is specified). */
   def dirKey(dir: String): String = {
     val sanitized = dir.replaceAll("[^A-Za-z0-9]", "_")
     val md = java.security.MessageDigest.getInstance("MD5")

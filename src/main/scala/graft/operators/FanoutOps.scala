@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.OpModule
-import graft.sources.{Sql, Tables}
+import graft.model.Fs
+import graft.sources.{Cached, Sql, Tables}
 
 /** The unit of fan-out work (one tile) and its outcome — the Spark
   * incarnation of the reference's per-tile worker call
@@ -78,10 +79,10 @@ object FanoutOps extends OpModule {
     var finished: Dataset[WorkerResult] = s.emptyDataset[WorkerResult]
     var attempt = 1
     while (attempt <= maxAttempts && !pending.isEmpty) {
-      // cache: res feeds the finished union, the pending semi join, and
-      // the loop's isEmpty probe — without it the nondeterministic-free
-      // but wasteful recompute runs the workers again per consumer
-      val res = runAttempt(s, pending, attempt).cache()
+      // persisted (held by Cached, so releaseAll frees it): res feeds the
+      // finished union, the pending semi join and the loop's isEmpty
+      // probe — without it the workers run again per consumer
+      val res = Cached.hold(s, runAttempt(s, pending, attempt))
       val lastRound = attempt == maxAttempts
       finished = finished.union(res.filter(r => r.ok || lastRound))
       val failed = res.filter(!_.ok).toDF().select("tile_id")
@@ -115,8 +116,7 @@ object FanoutOps extends OpModule {
     // K2 — per-tile export: partitionBy(tile) parquet sink + read-back
     // (ogr2ogr per-tile GPKG export, worker.py:646-669)
     "k2_pertile_export" -> ((s, dir) => {
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_k2_${dir.hashCode}").getPath
+      val out = Fs.scratch("k2", dir)
       Tables.features(s, dir)
         .select("o_orderkey", "o_totalprice", "tile_id")
         .write.mode("overwrite").partitionBy("tile_id").parquet(out)

@@ -283,27 +283,16 @@ object GraphOps extends OpModule {
     * managed table — the write-once layout every PageRank iteration's frontier
     * join consumes shuffle-free on the edge side (k15's machinery
     * applied to iterative graph state; plan property pinned in
-    * PlanSpec). Drop + location cleanup mirrors k15: the in-memory
-    * catalog forgets tables across JVMs but warehouse directories
-    * persist. */
+    * PlanSpec). */
   private[graft] def bucketedTradeEdges(s: SparkSession, dir: String): DataFrame = {
     // Layout.dirKey: sanitized dir + hash of the raw dir, so two corpus
     // dirs that sanitize identically never share a layout.
     val t = "g6_edges_" + graft.model.Layout.dirKey(dir)
-    // Build once per process (serving reality: build once, iterate
+    // Build once per session (serving reality: build once, iterate
     // many — the bench measures ITERATION cost, not a rewrite per
-    // call; keyed on the full sanitized dir so two corpora never share
-    // a layout). The guard is process-wide but the catalog is
-    // per-SESSION, so invalidUnless re-validates against THIS session's
-    // catalog: a fresh spec-local SparkSession rebuilds even though
-    // another session already did. BuildOnce holds the
-    // mark-only-after-success invariant.
-    graft.model.BuildOnce.once(t, invalidUnless = s.catalog.tableExists(t)) {
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      val loc = new java.io.File(wh, t)
-      if (loc.exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(loc)
+    // call). Cached holds the mark-only-after-success invariant.
+    Cached.once(s, t) {
+      Tables.dropManaged(s, t)
       // |buckets| = Layout.buckets: explicit env knob, cluster cores as
       // the fallback (pp6's partition rule applied to a LAYOUT — the
       // knob exists because defaultParallelism is time-varying under

@@ -1,12 +1,13 @@
 package graft.operators
 
 import java.nio.file.{Files, Paths}
+import java.util.regex.Pattern
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.OpModule
-import graft.model.TileGrid
+import graft.model.{Fs, TileGrid}
 import graft.sources.{Sql, Tables}
 
 /** Real filesystem directory scan (S5) and per-tile payload merge (K3).
@@ -21,7 +22,7 @@ import graft.sources.{Sql, Tables}
   */
 object MergeScanOps extends OpModule {
 
-  private val ScanBase = "/tmp/graft_ahn"
+  private val ScanBase = Fs.fixture("ahn")
 
   /** Create the fixture tree once: one 1-byte file per ElevFile path
     * (Spark's file listing skips empty files). */
@@ -41,7 +42,8 @@ object MergeScanOps extends OpModule {
       import s.implicits._
       val dirs = TileGrid.elevDirs.toDF()
       val files = s.read.format("binaryFile").load(s"$ScanBase/*/*")
-        .select(regexp_replace(col("path"), s"^file:.*?$ScanBase", "/data").as("path"))
+        .select(regexp_replace(col("path"),
+          s"^file:.*?${Pattern.quote(ScanBase)}", "/data").as("path"))
       files
         .withColumn("dir", regexp_extract(col("path"), "^/data/([^/]+)/", 1))
         .join(broadcast(dirs), col("dir") === col("name"))

@@ -60,21 +60,16 @@ object TextOps extends OpModule {
     * is not load-bearing. */
   private[operators] val Tx15RareMassMin = 0.05
 
-  /** Chosen tx15 arm per (session, corpus), memoized so the statistic
-    * job runs once and the decision is logged once. Stopped sessions are
-    * purged on the way in (the [[Cached]] rule). */
-  private val tx15Arm =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Boolean]
-
   /** Decide tx15's pair-join input arm for this corpus from the rare-df
     * presence-mass statistic computed from the cached wc relation (one
     * vocab-sized aggregate; at 100 TB nobody hand-sets a per-corpus
     * switch, so the plan choice must come from the data — the reference
-    * derives behavior from data the same way, tileconfig.py:443-497). */
+    * derives behavior from data the same way, tileconfig.py:443-497).
+    * Memoized per (session, corpus) in [[Cached]], so the statistic job
+    * runs once and the decision is logged once. */
   private def tx15Pushdown(s: SparkSession, dir: String,
-      wc: DataFrame): Boolean = {
-    tx15Arm.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    tx15Arm.getOrElseUpdate((s, dir), {
+      wc: DataFrame): Boolean =
+    Cached.once(s, s"tx15:arm:$dir") {
       val row = wc.agg(
         (sum(when(col("c") < 50, col("c")).otherwise(lit(0L)))
           / sum(col("c"))).as("rare_mass")).collect()(0)
@@ -86,8 +81,7 @@ object TextOps extends OpModule {
         Double.box(Tx15RareMassMin),
         if (pick) "pushdown" else "direct"))
       pick
-    })
-  }
+    }
 
   /** Exploded non-empty whitespace tokens per doc — shared persisted
     * relation ([[Cached]]): tx1/tx2/tx3 and PipelineOps.pp1 all aggregate

@@ -40,6 +40,16 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
+  /** Drop the managed table `name` together with its warehouse location.
+    * The in-memory catalog forgets a table when its session goes, but the
+    * directory stays, and a later saveAsTable of the same name fails with
+    * LOCATION_ALREADY_EXISTS unless both are cleared. */
+  def dropManaged(spark: SparkSession, name: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    graft.model.Fs.deleteRecursively(new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name))
+  }
+
   /** Features = orders + deterministic integer coordinates in the
     * [0,10000)^2 world and their tile assignment (SURVEY §7.1 fixture
     * adaptation: orders plays bagactueel.pandactueelbestaand, the derived

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
 import graft.OpModule
+import graft.model.Fs
 import graft.sources.{Sql, Tables}
 
 /** Structured-Streaming incarnation of the reference's resource monitor
@@ -165,9 +166,7 @@ object MonitorStream extends OpModule {
     // The query returns the read-back of the landed files, so the whole
     // write path sits inside the correctness gate.
     "st7_foreachbatch_sink" -> ((s, dir) => {
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_st7_${dir.hashCode}").getPath
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+      val out = Fs.scratch("st7", dir)
       val mon = Tables.monitorCols(Tables.eventsStream(s, dir))
         .select("event_id", "tile_id", "mem_rss")
       val saved = s.conf.get("spark.sql.shuffle.partitions")
@@ -238,9 +237,7 @@ object MonitorStream extends OpModule {
     // each merge shuffles only the micro-batch.
     "st10_stream_upsert" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_st10_${dir.hashCode}").getPath
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+      val base = Fs.scratch("st10", dir)
       val stage = s"$base/stage"
       val ev = Tables.events(s, dir).select("user_id", "event_id", "ts", "value")
       // 4 deterministic hash buckets, written as separate jobs so the
@@ -334,9 +331,7 @@ object MonitorStream extends OpModule {
     // plain batch oracle pin a two-run streaming pipeline.
     "st13_availablenow_ingest" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_st13_${ProcessHandle.current.pid}_${dir.hashCode}").getPath
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+      val base = Fs.scratch("st13", dir)
       val data = s"$base/data"
       val name = s"graft_stream_${nameSeq.incrementAndGet()}"
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")

@@ -38,9 +38,9 @@ class CliSpec extends SparkSpec {
     spark
     // s7's fixture writer produces the TSV the reference's recorder emits
     run("s7_tsv_scan").count()
-    val outDir = Files.createTempDirectory("graft_cli_plot").toString
+    val outDir = Files.createTempDirectory(graft.model.Fs.root.toPath, "cli_plot").toString
     val out = captureOut {
-      Cli.main(Array("plot-monitor-log", "/tmp/graft_monitor.tsv", outDir))
+      Cli.main(Array("plot-monitor-log", operators.SourceSinkOps.MonitorTsvPath, outDir))
     }
     assert(out.contains("wrote"), out)
     val rss = spark.read.option("header", "true").csv(s"$outDir/rss")
@@ -62,8 +62,8 @@ class CliSpec extends SparkSpec {
 
   test("plot-monitor-log on an empty TSV completes without figures") {
     spark
-    val emptyTsv = Files.createTempFile("graft_empty_monitor", ".tsv").toString
-    val outDir = Files.createTempDirectory("graft_cli_plot_empty").toString
+    val emptyTsv = Files.createTempFile(graft.model.Fs.root.toPath, "empty_monitor", ".tsv").toString
+    val outDir = Files.createTempDirectory(graft.model.Fs.root.toPath, "cli_plot_empty").toString
     val out = captureOut {
       Cli.main(Array("plot-monitor-log", emptyTsv, outDir))
     }

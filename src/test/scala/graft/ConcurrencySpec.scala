@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * once on one engine process must be byte-identical to sequential.
   *
   * Every other gate runs queries one at a time; a shared engine runs
-  * them concurrently, where the process-global build-once state
-  * (Cached's persisted relations, BuildOnce layouts, fixture writers,
-  * the JDBC proxy server) is exactly what races. [[ConcurrencyCheck]]
+  * them concurrently, where the shared build-once state (Cached's
+  * persisted relations and build-once layouts, fixture writers, the
+  * JDBC proxy server) is exactly what races. Like every Parity gate, it
+  * also fails if a relation is still cached after Cached.releaseAll(). [[ConcurrencyCheck]]
   * work-steals the surface across its 4 workers (session clone per worker,
   * FAIR scheduler pools) and pins exact fingerprint parity; the gate
   * also fails if the measured peak concurrency never reached 2 — a

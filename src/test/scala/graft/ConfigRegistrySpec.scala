@@ -14,8 +14,8 @@ import graft.model.ConfigRegistry
 class ConfigRegistrySpec extends AnyFunSuite {
 
   test("register/list/fetch/remove round-trip persists across instances") {
-    val regDir = Files.createTempDirectory("graft_registry")
-    val srcDir = Files.createTempDirectory("graft_registry_src")
+    val regDir = Files.createTempDirectory(graft.model.Fs.root.toPath, "registry")
+    val srcDir = Files.createTempDirectory(graft.model.Fs.root.toPath, "registry_src")
     val schemaA = srcDir.resolve("schema_a.yml")
     val schemaB = srcDir.resolve("schema_b.yml")
     Files.write(schemaA, "type: map\nmapping:\n  key_a: {type: str}\n".getBytes(UTF_8))

@@ -14,7 +14,7 @@ class DataGenSpec extends SparkSpec {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   private lazy val genDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_datagen_spec").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "datagen_spec").toString
     DataGen.generate(spark, 0.001, dir)
     dir
   }
@@ -32,7 +32,7 @@ class DataGenSpec extends SparkSpec {
   }
 
   test("generation is deterministic: a second run is row-identical") {
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_datagen_spec2").toString
+    val dir2 = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "datagen_spec2").toString
     DataGen.generate(spark, 0.001, dir2)
     Seq("orders", "lineitem", "documents", "events").foreach { t =>
       val a = spark.read.parquet(s"$genDir/$t.parquet")
@@ -75,7 +75,7 @@ class DataGenSpec extends SparkSpec {
     assert(DataGen.vocabFor(500000, heaps = true) == 310)
     // anchoring is byte-level: at a fixture-scale corpus the heaps mode
     // generates EXACTLY the default documents table
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_datagen_heaps").toString
+    val dir2 = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "datagen_heaps").toString
     DataGen.generate(spark, 0.001, dir2, heapsVocab = true)
     val a = spark.read.parquet(s"$genDir/documents.parquet")
     val b = spark.read.parquet(s"$dir2/documents.parquet")
@@ -88,7 +88,7 @@ class DataGenSpec extends SparkSpec {
     // a rare tail with df below any plausible frequency threshold, so the
     // df-threshold operators (tx15 pushdown, dd7 MaxDf, tx19 cap) have a
     // non-degenerate input even at spec scale
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_datagen_open").toString
+    val dir2 = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "datagen_open").toString
     DataGen.generate(spark, 0.001, dir2, openVocab = true)
     val docs = spark.read.parquet(s"$dir2/documents.parquet")
     // schema parity with the fixture regime
@@ -109,7 +109,7 @@ class DataGenSpec extends SparkSpec {
     assert(topW.forall(w => !w.startsWith("w") || w == "window"),
       s"head words $topW should come from the 31-word base vocab")
     // deterministic: a second run is row-identical
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_datagen_open2").toString
+    val dir3 = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "datagen_open2").toString
     DataGen.generate(spark, 0.001, dir3, openVocab = true)
     val b2 = spark.read.parquet(s"$dir3/documents.parquet")
     assert(docs.exceptAll(b2).isEmpty && b2.exceptAll(docs).isEmpty)
@@ -123,7 +123,7 @@ class DataGenSpec extends SparkSpec {
     // while the default isotropic mode shows NO label structure. Both
     // properties are what the two-regime recall curve in
     // records/QMETRICS_nn_recall_curve_r18.jsonl leans on.
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_datagen_clu").toString
+    val dir2 = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "datagen_clu").toString
     DataGen.generate(spark, 0.001, dir2, clustered = true)
     def meanCos(path: String): (Double, Double) = {
       val e = spark.read.parquet(s"$path/embeddings.parquet")

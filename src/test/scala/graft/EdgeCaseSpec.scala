@@ -9,7 +9,7 @@ class EdgeCaseSpec extends SparkSpec {
   test("empty corpus: the whole dedup/text family returns empty, never throws") {
     // a 100 TB pipeline routinely hits empty partitions/shards; every
     // corpus operator must degrade to an empty result
-    val emptyDir = new java.io.File(sys.props("java.io.tmpdir"), "graft_empty_sf").getPath
+    val emptyDir = graft.model.Fs.scratch("empty_sf", Sf)
     for (t <- Seq("documents", "embeddings", "events")) {
       spark.read.parquet(s"$Sf/$t.parquet").limit(0)
         .write.mode("overwrite").parquet(s"$emptyDir/$t.parquet")
@@ -36,7 +36,7 @@ class EdgeCaseSpec extends SparkSpec {
     // read must quarantine them (null row + corrupt-record column), never
     // abort the job — the S7 scan's failure mode
     import org.apache.spark.sql.types._
-    val tsv = new java.io.File(sys.props("java.io.tmpdir"), "graft_corrupt.tsv")
+    val tsv = new java.io.File(graft.model.Fs.scratch("corrupt_tsv", Sf))
     java.nio.file.Files.write(tsv.toPath,
       ("2024-01-01 00:00:00\tt0_0\t100\t1.5\t0.5\t1000\n" +
        "NOT_A_TIMESTAMP\tt0_1\tNaN\toops\n" + // malformed line
@@ -92,7 +92,7 @@ class EdgeCaseSpec extends SparkSpec {
     // overwrite mode would wipe every tile's output; dynamic mode
     // replaces exactly the partitions present in the new write
     import spark.implicits._
-    val out = new java.io.File(sys.props("java.io.tmpdir"), "graft_dpo").getPath
+    val out = graft.model.Fs.scratch("dpo", Sf)
     Seq(("t0_0", "orig0"), ("t1_1", "orig1")).toDF("tile_id", "v")
       .write.partitionBy("tile_id").mode("overwrite").parquet(out)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

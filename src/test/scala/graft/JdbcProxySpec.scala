@@ -33,7 +33,7 @@ class JdbcProxySpec extends SparkSpec {
   }
 
   test("SQL errors propagate through the wire (missing table keeps Derby's SQLState)") {
-    val url = graft.jdbc.DerbyTcpServer.url("/tmp/graft_proxy_errdb")
+    val url = graft.jdbc.DerbyTcpServer.url(graft.model.Fs.path("proxy_errdb", Sf))
     val e = intercept[Exception] {
       spark.read.jdbc(url, "graft_no_such_table", props).count()
     }
@@ -50,7 +50,7 @@ class JdbcProxySpec extends SparkSpec {
 
   test("typed values and SQL NULL round-trip the wire") {
     import spark.implicits._
-    val url = graft.jdbc.DerbyTcpServer.url("/tmp/graft_proxy_nulldb")
+    val url = graft.jdbc.DerbyTcpServer.url(graft.model.Fs.path("proxy_nulldb", Sf))
     val in = Seq(
       (1L, Some("alpha"), Some(2.5), Some(true)),
       (2L, None: Option[String], None: Option[Double], None: Option[Boolean]))
@@ -88,7 +88,7 @@ class JdbcProxySpec extends SparkSpec {
         e.isInstanceOf[java.net.SocketException], s"unexpected: $e")
     } finally sock.close()
     // the accept loop survives: a legitimate connection still works
-    val url = graft.jdbc.DerbyTcpServer.url("/tmp/graft_proxy_filterdb")
+    val url = graft.jdbc.DerbyTcpServer.url(graft.model.Fs.path("proxy_filterdb", Sf))
     import spark.implicits._
     Seq((1L, "ok")).toDF("id", "s").write.mode("overwrite").jdbc(url, "filter_rt", props)
     assert(spark.read.jdbc(url, "filter_rt", props).count() == 1)
@@ -114,7 +114,7 @@ class JdbcProxySpec extends SparkSpec {
         e.isInstanceOf[java.net.SocketException], s"unexpected: $e")
     } finally sock.close()
     // the accept loop survives
-    val url = graft.jdbc.DerbyTcpServer.url("/tmp/graft_proxy_depthdb")
+    val url = graft.jdbc.DerbyTcpServer.url(graft.model.Fs.path("proxy_depthdb", Sf))
     import spark.implicits._
     Seq((1L, "ok")).toDF("id", "s").write.mode("overwrite").jdbc(url, "depth_rt", props)
     assert(spark.read.jdbc(url, "depth_rt", props).count() == 1)

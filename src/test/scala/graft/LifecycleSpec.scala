@@ -32,8 +32,7 @@ class LifecycleSpec extends SparkSpec {
     val preferred = sys.env.getOrElse("GRAFT_GEN_DIR", "/tmp/gen/sf1")
     if (Files.exists(Paths.get(preferred, "orders.parquet"))) preferred
     else {
-      val d = Files.createTempDirectory("graft_lifecycle_gen").toString
-      graft.model.Fs.deleteRecursivelyOnExit(new java.io.File(d))
+      val d = Files.createTempDirectory(graft.model.Fs.root.toPath, "lifecycle_gen").toString
       DataGen.generate(spark, 0.1, d, heapsVocab = true)
       d
     }
@@ -60,8 +59,7 @@ class LifecycleSpec extends SparkSpec {
     assert(runOut.contains(s"features_processed=$expectFeatures"), runOut)
 
     // ---- export-tile-inputs: per-tile footprints + merged payloads ----
-    val exportDir = Files.createTempDirectory("graft_lifecycle_export").toString
-    graft.model.Fs.deleteRecursivelyOnExit(new java.io.File(exportDir))
+    val exportDir = Files.createTempDirectory(graft.model.Fs.root.toPath, "lifecycle_export").toString
     val exportOut = captureOut {
       Cli.main(Array("export-tile-inputs", corpusDir, exportDir))
     }
@@ -84,7 +82,7 @@ class LifecycleSpec extends SparkSpec {
     val counts = graft.sources.Tables.features(spark, corpusDir)
       .groupBy("tile_id").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val tsv = Files.createTempFile("graft_lifecycle_monitor", ".tsv")
+    val tsv = Files.createTempFile(graft.model.Fs.root.toPath, "lifecycle_monitor", ".tsv")
     val lines = for {
       t <- tiles.map(_.tile_id).sorted
       s <- 0 until 3
@@ -96,8 +94,7 @@ class LifecycleSpec extends SparkSpec {
     Files.writeString(tsv, lines.mkString("\n"))
 
     // ---- plot-monitor-log: CSV series + the reference's figures ----
-    val plotDir = Files.createTempDirectory("graft_lifecycle_plot").toString
-    graft.model.Fs.deleteRecursivelyOnExit(new java.io.File(plotDir))
+    val plotDir = Files.createTempDirectory(graft.model.Fs.root.toPath, "lifecycle_plot").toString
     val plotOut = captureOut {
       Cli.main(Array("plot-monitor-log", tsv.toString, plotDir))
     }

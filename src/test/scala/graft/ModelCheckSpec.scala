@@ -276,8 +276,7 @@ class ModelCheckSpec extends SparkSpec {
 
   test("st13: the second AvailableNow run reads only the newly landed files") {
     run("st13_availablenow_ingest").collect()
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_st13_${ProcessHandle.current.pid}_${Sf.hashCode}")
+    val base = new java.io.File(graft.model.Fs.path("st13", Sf))
     val offsets = new java.io.File(base, "ckpt/offsets").list().toSet
     assert(offsets.contains("0") && offsets.contains("1"),
       s"expected exactly the two AvailableNow batches, saw $offsets")

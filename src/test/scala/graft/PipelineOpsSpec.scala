@@ -680,9 +680,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("k18: dynamic overwrite replaces only the incoming partition's files") {
-    val out = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_k18spec_${ProcessHandle.current.pid}").getPath
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    val out = graft.model.Fs.scratch("k18spec", Sf)
     val docs = sources.Tables.documents(spark, Sf)
     docs.select("doc_id", "n_chars", "lang")
       .write.partitionBy("lang").mode("overwrite").parquet(out)

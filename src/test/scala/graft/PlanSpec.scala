@@ -143,7 +143,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("per-tile read of a tile-partitioned layout prunes to one partition") {
-    val out = new java.io.File(sys.props("java.io.tmpdir"), "graft_prune").getPath
+    val out = graft.model.Fs.scratch("prune", Sf)
     graft.sources.Tables.features(spark, Sf)
       .select("o_orderkey", "tile_id")
       .write.mode("overwrite").partitionBy("tile_id").parquet(out)
@@ -158,13 +158,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bucketed co-located join runs without a shuffle exchange") {
-    for (t <- Seq("li_bucketed", "o_bucketed")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      val loc = new java.io.File(wh, t)
-      if (loc.exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(loc)
-    }
+    Seq("li_bucketed", "o_bucketed").foreach(graft.sources.Tables.dropManaged(spark, _))
     val sf = spark.read.parquet(s"$Sf/lineitem.parquet")
     sf.write.mode("overwrite").bucketBy(8, "l_orderkey")
       .sortBy("l_orderkey").saveAsTable("li_bucketed")

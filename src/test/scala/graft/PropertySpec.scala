@@ -269,7 +269,7 @@ class PropertySpec extends SparkSpec {
       .getOrCreate()
     try {
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_overlap_prop").toString
+      val dir = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "overlap_prop").toString
 
       // ---- non-nullable elements: the rule FIRES; results must equal
       // both the un-matched spelling (>= 1, same predicate, outside the

@@ -34,7 +34,7 @@ class SkewStressSpec extends SparkSpec {
     * so the registered queries (and their per-dir caches) run unmodified
     * against it. */
   private lazy val skewDir: String = {
-    val dir = Files.createTempDirectory("graft_skew").toString
+    val dir = Files.createTempDirectory(graft.model.Fs.root.toPath, "skew").toString
     val boiler = (1 to 200).map(i => s"boilertoken$i").mkString(" ")
     Tables.documents(spark, corpusDir)
       .withColumn("text",

@@ -16,7 +16,7 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.sql.warehouse.dir",
-      s"/tmp/graft_warehouse_${ProcessHandle.current.pid}")
+      new java.io.File(graft.model.Fs.root, "warehouse").getPath)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

@@ -268,8 +268,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => r.getLong(0) -> ((r.getDouble(1), r.getTimestamp(2)))).toMap
     // the run stages >= 4 files with maxFilesPerTrigger=1, so the merge
     // path must have produced multiple snapshot versions
-    val base = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_st10_${Sf.hashCode}")
+    val base = new java.io.File(graft.model.Fs.path("st10", Sf))
     val versions = base.listFiles().map(_.getName).filter(_.startsWith("v"))
     assert(versions.length >= 4, versions.mkString(","))
     // batch-boundary-free convergence: identical to the direct recompute

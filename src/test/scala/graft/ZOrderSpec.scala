@@ -44,9 +44,7 @@ class ZOrderSpec extends SparkSpec {
     val li = sources.Tables.lineitem(spark, dir)
       .select("l_orderkey", "l_partkey", "l_suppkey")
     def filesForLayout(sorted: org.apache.spark.sql.DataFrame, tag: String): Long = {
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_zspec_${tag}_${ProcessHandle.current.pid}").getPath
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+      val out = graft.model.Fs.scratch(s"zspec_$tag", dir)
       sorted.write.mode("overwrite")
         .option("maxRecordsPerFile", 2000).parquet(out)
       spark.read.parquet(out)
