@@ -28,12 +28,13 @@ import org.apache.spark.sql.SparkSession
   * would serve a partial layout to a query that then returns silently
   * wrong rows — at 100 TB, to a tenant.
   *
-  * Determinism note: per-worker session CLONES (`newSession()`) share
-  * the context, catalog, cache manager and all the state above, but
-  * isolate SQLConf — required because the streaming harness temporarily
-  * retunes shuffle partitions per query (MonitorStream.runToTable), a
-  * session-level mutation no real concurrent deployment would share
-  * either (Thrift server gives each client its own session).
+  * Determinism note: per-worker sessions (`newSession()`) share the
+  * context, catalog, cache manager and all the state above, but each has
+  * its own temp views — several queries register views under fixed names
+  * (`orders_v`, `boundaries_v`, `emb_v`, ...), which two workers on one
+  * session would overwrite under each other, just as a Thrift server
+  * gives each client its own session. Session conf needs no isolation:
+  * no query writes it ([[Session.narrowed]]).
   *
   * Usage: runMain graft.ConcurrencyCheck [sfDir]
   * Prints one JSON line; ConcurrencySpec launches it as a subprocess.

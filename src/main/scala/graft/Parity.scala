@@ -37,19 +37,26 @@ object Parity {
     * (which drains the listener bus, so counters a hook registered are
     * complete afterwards) and clear the active and default sessions so
     * the next phase builds a fresh one. Returns the body's run and the
-    * hook's value. A relation still cached after `Cached.releaseAll()`
-    * fails the run: a leak no fingerprint shows. */
+    * hook's value. A relation still cached after `Cached.releaseAll()`,
+    * or a session conf the body left changed, fails the run: leaks no
+    * fingerprint shows. */
   def phase[A](builder: SparkSession.Builder, hook: SparkSession => A)(
       body: (SparkSession, A) => Run): (Run, A) = {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       val a = hook(spark)
+      val before = spark.conf.getAll
       val run = body(spark, a)
       graft.sources.Cached.releaseAll()
-      (if (spark.sharedState.cacheManager.isEmpty) run
-       else run ++ Run(Map.empty, Map("cache_invariant" ->
-         "relations still cached after Cached.releaseAll()")), a)
+      val after = spark.conf.getAll
+      val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+      val errs =
+        (if (spark.sharedState.cacheManager.isEmpty) Map.empty[String, String]
+         else Map("cache_invariant" -> "relations still cached after Cached.releaseAll()")) ++
+        (if (changed.isEmpty) Map.empty[String, String]
+         else Map("conf_invariant" -> s"session conf changed: ${changed.toSeq.sorted.mkString(",")}"))
+      (run ++ Run(Map.empty, errs), a)
     } finally {
       graft.sources.Cached.releaseAll()
       spark.stop()

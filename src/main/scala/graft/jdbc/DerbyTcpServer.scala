@@ -39,8 +39,7 @@ object DerbyTcpServer {
   def port: Int = {
     if (boundPort < 0) synchronized {
       if (boundPort < 0) {
-        sys.props.getOrElseUpdate("derby.stream.error.file",
-          new java.io.File(graft.model.Fs.root, "derby.log").getPath)
+        graft.model.Fs.root // sets Derby's log location before it boots
         val ss = new ServerSocket(0, 64, InetAddress.getLoopbackAddress)
         val t = new Thread(() => acceptLoop(ss), "graft-derby-tcp-accept")
         t.setDaemon(true)

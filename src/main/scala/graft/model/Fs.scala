@@ -18,10 +18,13 @@ object Fs {
   def rootOf(pid: Long): File = new File(tmp, s"graft_$pid")
 
   /** This process's scratch root. File.deleteOnExit can't remove a
-    * non-empty directory, hence the shutdown hook. */
+    * non-empty directory, hence the shutdown hook. Embedded Derby logs
+    * here too, not to `./derby.log`: every graft session's warehouse sits
+    * under the root, so it is set before Derby can first boot. */
   lazy val root: File = {
     val r = rootOf(ProcessHandle.current.pid)
     r.mkdirs()
+    sys.props.getOrElseUpdate("derby.stream.error.file", new File(r, "derby.log").getPath)
     Runtime.getRuntime.addShutdownHook(
       new Thread(() => deleteRecursively(r), "graft-scratch-cleanup"))
     r

@@ -23,10 +23,16 @@ object Layout {
     * zero, negative) FAILS rather than falling back: the knob exists
     * precisely to prevent silently baking a narrow layout, so a typo'd
     * value reverting to the time-varying default would defeat it without
-    * a trace in a write-once artifact (validation shared via [[Knob]]). */
+    * a trace in a write-once artifact. */
   def buckets(s: SparkSession,
       env: String => Option[String] = sys.env.get): Int =
-    Knob.posInt(EnvKnob, s.sparkContext.defaultParallelism, env)
+    env(EnvKnob) match {
+      case None => s.sparkContext.defaultParallelism
+      case Some(raw) =>
+        val n = raw.trim.toIntOption.getOrElse(0)
+        require(n > 0, s"$EnvKnob must be a positive integer, got '$raw'")
+        n
+    }
 
   /** Collision-free identifier component for a corpus directory, used in
     * per-corpus layout table names and scratch dir names ([[Fs]]).

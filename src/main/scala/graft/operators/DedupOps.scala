@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.OpModule
+import graft.{OpModule, Session}
 import graft.sources.{Cached, Sql, Tables}
 
 /** Deduplication suite over the `documents` table — the training-data
@@ -35,10 +36,8 @@ object DedupOps extends OpModule {
     * the SQL `conv(substr(md5(..),1,15),16,10)` form, without the three
     * per-row string allocations; equality pinned in PropertySpec). */
   def h60(prefix: String, c: Column): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.Hash60(
-        org.apache.spark.sql.GraftColumnBridge.expression(
-          concat(lit(prefix), c))))
+    ColumnBridge.toColumn(
+      graft.functions.Hash60(ColumnBridge.toExpression(concat(lit(prefix), c))))
 
   /** DuckDB-side rendering of [[h60]] — the single source of truth for the
     * portable hash in oracle SQL (reused by SampleOps/PipelineOps). */
@@ -264,10 +263,8 @@ object DedupOps extends OpModule {
     // re-evaluate the digest loop once per slot) — CollapseProject
     // refuses to duplicate non-cheap expressions, and LshSpec pins
     // exactly one minhasharray node in dd14's physical plan.
-    val mha = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.functions.MinHashArray(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("sh")),
-        cfg.numHashes))
+    val mha = ColumnBridge.toColumn(
+      graft.functions.MinHashArray(ColumnBridge.toExpression(col("sh")), cfg.numHashes))
     val mins = (0 until cfg.numHashes).map(seed =>
       min(element_at(col("mha"), seed + 1)).as(s"m$seed"))
     val wide = sh.filter(col("sh").isNotNull)
@@ -690,10 +687,7 @@ object DedupOps extends OpModule {
     // stores). A production whole-corpus graph sets this to graph
     // size / target partition bytes.
     val s = pairs.sparkSession
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try componentsLoop(pairs)
-    finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    Session.on(s, componentsLoop(Session.on(Session.narrowed(s, 8), pairs)))
   }
 
   private def componentsLoop(pairs: DataFrame): DataFrame = {
@@ -753,10 +747,7 @@ object DedupOps extends OpModule {
     * [[componentsOf]]: rounds are sized to the GRAPH, not the corpus. */
   def starComponentsOf(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try starLoop(pairs)
-    finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    Session.on(s, starLoop(Session.on(Session.narrowed(s, 8), pairs)))
   }
 
   private def starLoop(pairs: DataFrame): DataFrame = {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.OpModule
+import graft.{OpModule, Session}
 import graft.sources.{Cached, Sql, Tables}
 
 /** Graph operators over relationship graphs derived from the fixture's
@@ -339,12 +339,14 @@ object GraphOps extends OpModule {
     // for tradeEdgesDeg) forever. Unmaterialized (first call in a fresh
     // session), the estimate path returns that huge value, the min()
     // hits the session ceiling, and behavior is simply unchanged — the
-    // safe fallback.
-    val bytes: BigInt = rel.queryExecution.optimizedPlan.collectFirst {
+    // safe fallback. Every loaded cache counts, once however often the
+    // plan reads it: a tiny auxiliary cache must not size the rounds.
+    val plan = rel.queryExecution.optimizedPlan
+    val loaded = plan.collect {
       case m: org.apache.spark.sql.execution.columnar.InMemoryRelation
-          if m.cacheBuilder.isCachedColumnBuffersLoaded =>
-        BigInt(m.cacheBuilder.sizeInBytesStats.value)
-    }.getOrElse(rel.queryExecution.optimizedPlan.stats.sizeInBytes)
+          if m.cacheBuilder.isCachedColumnBuffersLoaded => m.cacheBuilder
+    }.distinct.map(b => BigInt(b.sizeInBytesStats.value))
+    val bytes = if (loaded.nonEmpty) loaded.sum else plan.stats.sizeInBytes
     val n = ((bytes + RoundPartitionBytes - 1) / RoundPartitionBytes)
       .min(BigInt(sessionParts)).max(BigInt(1)).toInt
     // one bounded stderr line per loop entry (the tx15 regime-print
@@ -354,31 +356,17 @@ object GraphOps extends OpModule {
     n
   }
 
-  /** Run `body` with the per-round shuffle sizing of [[roundPartitions]];
-    * restores the session setting afterwards. Binding rule: this only
-    * affects shuffles whose plans are FINALIZED inside `body` — the
-    * eager/lazy localCheckpoint loops qualify (even a lazy checkpoint
-    * builds its RDD, fixing reducer counts, at construction); a fully
-    * lazy composition like g1/g6's step chain does not (its shuffles plan
-    * at the caller's terminal action, under the restored session conf). */
-  private def withRoundSizedShuffle[T](s: SparkSession, rel: DataFrame)(
-      body: => T): T = {
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      roundPartitions(s, rel).toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", saved)
-  }
-
   /** Synchronous label propagation: `rounds` mode-label updates over a
     * symmetric (src, dst) edge relation. Each round every node adopts
     * the most frequent label among its NEIGHBORS (self excluded),
     * smallest label on ties — (count desc, label asc) realized as
     * min_by over a ((-count), label) struct, the a21 trick. Exposed for
     * the synthetic-graph goldens in GraphSpec. */
-  private[graft] def lpa(edges: DataFrame, rounds: Int): DataFrame =
-    withRoundSizedShuffle(edges.sparkSession, edges) {
-      lpaLoop(edges, rounds)
-    }
+  private[graft] def lpa(edges: DataFrame, rounds: Int): DataFrame = {
+    val s = edges.sparkSession
+    val n = Session.narrowed(s, roundPartitions(s, edges))
+    Session.on(s, lpaLoop(Session.on(n, edges), rounds))
+  }
 
   private def lpaLoop(edges: DataFrame, rounds: Int): DataFrame = {
     // LAZY localCheckpoint (r18 optimization): the round count is fixed —
@@ -437,10 +425,11 @@ object GraphOps extends OpModule {
     * extra passes over the data, which is the shape an
     * iterate-to-fixpoint job must have at 100 TB (a separate
     * diff-relation action per round would double every iteration). */
-  private[graft] def pagerankConverged(edgesDeg: DataFrame, cap: Int): DataFrame =
-    withRoundSizedShuffle(edgesDeg.sparkSession, edgesDeg) {
-      pagerankConvergedLoop(edgesDeg, cap)
-    }
+  private[graft] def pagerankConverged(edgesDeg: DataFrame, cap: Int): DataFrame = {
+    val s = edgesDeg.sparkSession
+    val n = Session.narrowed(s, roundPartitions(s, edgesDeg))
+    Session.on(s, pagerankConvergedLoop(Session.on(n, edgesDeg), cap))
+  }
 
   private def pagerankConvergedLoop(edgesDeg: DataFrame, cap: Int): DataFrame = {
     // init checkpoint is EAGER, like the per-round ones below (obs.get
@@ -539,10 +528,11 @@ object GraphOps extends OpModule {
     * (node, d=0) seed frame — g4's recurrence, exposed for the
     * synthetic-graph specs (path/star distances known in closed form). */
   private[graft] def bfsHistogram(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame =
-    withRoundSizedShuffle(edges.sparkSession, edges) {
-      bfsLoop(edges, seeds, rounds)
-    }
+      rounds: Int): DataFrame = {
+    val s = edges.sparkSession
+    val n = Session.narrowed(s, roundPartitions(s, edges))
+    Session.on(s, bfsLoop(Session.on(n, edges), Session.on(n, seeds), rounds))
+  }
 
   private def bfsLoop(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {

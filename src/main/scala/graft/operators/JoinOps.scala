@@ -27,20 +27,20 @@ object JoinOps extends OpModule {
     * InjectRuntimeFilter rule plants for exactly this semi-join
     * reduction. `might_contain` is not in the public function registry
     * (it is internal to the runtime-filter rewrite), so the Column is
-    * built through [[org.apache.spark.sql.GraftColumnBridge]]; the
+    * built through [[org.apache.spark.sql.graft.ColumnBridge]]; the
     * sketch bytes are a foldable Literal, which is the same way the
     * built-in rule delivers its materialized subquery result to the
     * scan. */
   private[graft] def mightContain(bf: org.apache.spark.util.sketch.BloomFilter,
       key: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.GraftColumnBridge
+    import org.apache.spark.sql.graft.ColumnBridge
     val out = new java.io.ByteArrayOutputStream()
     bf.writeTo(out)
-    GraftColumnBridge.column(
+    ColumnBridge.toColumn(
       new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         org.apache.spark.sql.catalyst.expressions.Literal(
           out.toByteArray, org.apache.spark.sql.types.BinaryType),
-        GraftColumnBridge.expression(key)))
+        ColumnBridge.toExpression(key)))
   }
 
   /** The j12 probe with its degenerate case handled: an EMPTY build side

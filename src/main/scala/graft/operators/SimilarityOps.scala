@@ -514,14 +514,14 @@ object SimilarityOps extends OpModule {
     * intermediate relation — inside whole-stage codegen
     * (records/QMETRICS_nn_sf10sf30sf100_r16.jsonl). */
   private[graft] def pqCodes(e: DataFrame, anchors: Int = 16): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    import org.apache.spark.sql.graft.ColumnBridge.{toColumn, toExpression}
     val cbArr = pqCodebook(e, anchors).groupBy("sub")
       .agg(collect_list(struct(col("cid"), col("cvec"))).as("cands"))
     pqSlices(e, "vec_id", "v")
       .join(broadcast(cbArr), Seq("sub"))
       .select(col("vec_id"), col("sub"),
-        column(graft.functions.PqArgmin(
-          expression(col("v")), expression(col("cands")))).as("cid"))
+        toColumn(graft.functions.PqArgmin(
+          toExpression(col("v")), toExpression(col("cands")))).as("cid"))
   }
 
   private val cosSql =

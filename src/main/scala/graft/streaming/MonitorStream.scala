@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 
-import graft.OpModule
+import graft.{OpModule, Session}
 import graft.model.Fs
 import graft.sources.{Sql, Tables}
 
@@ -31,14 +31,13 @@ object MonitorStream extends OpModule {
     // a stateful streaming query materializes one state store per shuffle
     // partition per batch; at test scale that fixed cost dominates, so run
     // the micro-batch with few partitions (a real deployment sizes this to
-    // key cardinality — state is per-key either way)
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-    s.table(name)
+    // key cardinality — state is per-key either way). The memory sink's
+    // view is registered on the session that started the stream.
+    val n = Session.narrowed(s, 4)
+    val q = Session.on(n, df).writeStream.outputMode(mode).format("memory")
+      .queryName(name).start()
+    try q.processAllAvailable() finally q.stop()
+    Session.on(s, n.table(name))
   }
 
   /** Tumbling 1-hour windows per tile with a watermark (scaled form of
@@ -167,18 +166,14 @@ object MonitorStream extends OpModule {
     // write path sits inside the correctness gate.
     "st7_foreachbatch_sink" -> ((s, dir) => {
       val out = Fs.scratch("st7", dir)
-      val mon = Tables.monitorCols(Tables.eventsStream(s, dir))
+      val mon = Tables.monitorCols(Tables.eventsStream(Session.narrowed(s, 4), dir))
         .select("event_id", "tile_id", "mem_rss")
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = mon.writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("append").parquet(out)
-            ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      val q = mon.writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch.write.mode("append").parquet(out)
+          ()
+        }.start()
+      try q.processAllAvailable() finally q.stop()
       s.read.parquet(out)
     }),
 
@@ -249,28 +244,25 @@ object MonitorStream extends OpModule {
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts").desc, col("event_id").desc)
       var cur: Option[String] = None
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val latestB = batch.withColumn("rn", row_number().over(w))
+      val n = Session.narrowed(s, 4)
+      val q = n.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1).parquet(stage)
+        .writeStream.outputMode("append")
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val latestB = batch.withColumn("rn", row_number().over(w))
+            .filter(col("rn") === 1).drop("rn")
+          val merged = cur match {
+            case None => latestB
+            case Some(p) => n.read.parquet(p).unionByName(latestB)
+              .withColumn("rn", row_number().over(w))
               .filter(col("rn") === 1).drop("rn")
-            val merged = cur match {
-              case None => latestB
-              case Some(p) => s.read.parquet(p).unionByName(latestB)
-                .withColumn("rn", row_number().over(w))
-                .filter(col("rn") === 1).drop("rn")
-            }
-            val next = s"$base/v$id"
-            merged.write.mode("overwrite").parquet(next)
-            cur = Some(next)
-            ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+          }
+          val next = s"$base/v$id"
+          merged.write.mode("overwrite").parquet(next)
+          cur = Some(next)
+          ()
+        }.start()
+      try q.processAllAvailable() finally q.stop()
       // an empty source can yield zero micro-batches → no snapshot version
       cur.map(p => s.read.parquet(p)).getOrElse(ev.limit(0))
         .select("user_id", "value", "ts")
@@ -334,27 +326,24 @@ object MonitorStream extends OpModule {
       val base = Fs.scratch("st13", dir)
       val data = s"$base/data"
       val name = s"graft_stream_${nameSeq.incrementAndGet()}"
-      val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        def runOnce(): Unit = {
-          val q = s.readStream.schema(docs.schema).parquet(data)
-            .groupBy("lang")
-            .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
-            .writeStream.outputMode("complete").format("memory")
-            .queryName(name)
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination() finally q.stop()
-        }
-        docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(data)
-        runOnce()
-        docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(data)
-        runOnce()
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-      s.table(name)
+      val n = Session.narrowed(s, 4)
+      val docs = Tables.documents(n, dir).select("doc_id", "lang", "n_chars")
+      def runOnce(): Unit = {
+        val q = n.readStream.schema(docs.schema).parquet(data)
+          .groupBy("lang")
+          .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
+          .writeStream.outputMode("complete").format("memory")
+          .queryName(name)
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        try q.awaitTermination() finally q.stop()
+      }
+      docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(data)
+      runOnce()
+      docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(data)
+      runOnce()
+      Session.on(s, n.table(name))
     }),
 
     // ST14 (extension) — STREAMING DECONTAMINATION at ingest: the

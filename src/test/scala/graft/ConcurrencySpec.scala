@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * them concurrently, where the shared build-once state (Cached's
   * persisted relations and build-once layouts, fixture writers, the
   * JDBC proxy server) is exactly what races. Like every Parity gate, it
-  * also fails if a relation is still cached after Cached.releaseAll(). [[ConcurrencyCheck]]
+  * also fails if a relation is still cached after Cached.releaseAll() or
+  * the session conf changed. [[ConcurrencyCheck]]
   * work-steals the surface across its 4 workers (session clone per worker,
   * FAIR scheduler pools) and pins exact fingerprint parity; the gate
   * also fails if the measured peak concurrency never reached 2 — a

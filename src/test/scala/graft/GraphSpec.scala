@@ -236,4 +236,25 @@ class GraphSpec extends SparkSpec {
       .agg(sum("n_nodes")).first().getLong(0)
     assert(viaQuery == total, "community sizes must sum to the node count")
   }
+
+  test("round sizing counts every loaded cache in the plan, not the first one found") {
+    // a tiny materialized cache first in plan order, joined with one
+    // large enough for 2+ round partitions: the rounds size from both
+    val tiny = spark.range(0, 16).select(col("id").as("k")).persist()
+    val big = spark.range(0, 1500000)
+      .select((col("id") % 16).as("k"), xxhash64(col("id")).as("a"),
+        xxhash64(col("id"), lit(1)).as("b"))
+      .persist()
+    try {
+      tiny.collect()
+      big.count()
+      assert(GraphOps.roundPartitions(spark, tiny) == 1)
+      val alone = GraphOps.roundPartitions(spark, big)
+      assert(alone >= 2, s"the large cache alone sizes $alone partitions")
+      assert(GraphOps.roundPartitions(spark, tiny.join(big, "k")) >= alone)
+    } finally {
+      tiny.unpersist()
+      big.unpersist()
+    }
+  }
 }

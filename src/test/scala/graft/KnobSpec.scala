@@ -1,40 +1,38 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.model.Layout
 
-import graft.model.Knob
-
-/** Contract for validated numeric env knobs ([[Knob.posInt]] — the
-  * Layout rule generalized):
-  * unset falls back, valid wins, set-but-invalid raises NAMING the knob.
-  * A salt of 0 is a silent degeneration (a divide-by-nothing shuffle
-  * layout), so zero and negatives must fail parsing, never reach the
-  * operator. */
-class KnobSpec extends AnyFunSuite {
+/** Contract for the parsing rule of the [[Layout.buckets]] env knob,
+  * stated for any knob name the rule is ever reused for: unset falls
+  * back, valid wins, set-but-invalid raises NAMING the knob. A width of
+  * 0 is a silent degeneration (a divide-by-nothing shuffle layout), so
+  * zero and negatives must fail parsing, never reach the operator.
+  * LayoutSpec pins the same rule against the layout's own fallback. */
+class KnobSpec extends SparkSpec {
 
   test("unset knob takes the default") {
-    assert(Knob.posInt("X", 16, _ => None) == 16)
+    assert(Layout.buckets(spark, _ => None) ==
+      spark.sparkContext.defaultParallelism)
   }
 
   test("valid knob wins, whitespace tolerated") {
-    assert(Knob.posInt("X", 16, _ => Some("64")) == 64)
-    assert(Knob.posInt("X", 16, _ => Some(" 8 ")) == 8)
+    assert(Layout.buckets(spark, _ => Some("64")) == 64)
+    assert(Layout.buckets(spark, _ => Some(" 8 ")) == 8)
   }
 
   test("set-but-invalid knob raises, naming the env var") {
     for (bad <- Seq("0", "-3", "abc", "", "1.5", "1e3")) {
       val e = intercept[IllegalArgumentException](
-        Knob.posInt("SPARK_GRAFT_SOME_KNOB", 16, _ => Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_SOME_KNOB"),
-        s"'$bad': ${e.getMessage}")
+        Layout.buckets(spark, _ => Some(bad)))
+      assert(e.getMessage.contains(Layout.EnvKnob), s"'$bad': ${e.getMessage}")
       assert(e.getMessage.contains(bad) || bad.isEmpty,
         s"'$bad': ${e.getMessage}")
     }
   }
 
   test("the default is not evaluated when the knob is set") {
-    // Layout passes defaultParallelism lazily; a set knob must not
-    // touch it (it can be expensive or unavailable)
-    assert(Knob.posInt("X", sys.error("default forced"), _ => Some("5")) == 5)
+    // the fallback reads defaultParallelism from the session; a set knob
+    // must not touch it (it is time-varying, and absent with no session)
+    assert(Layout.buckets(null, _ => Some("5")) == 5)
   }
 }

@@ -20,10 +20,11 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("set-but-invalid knob raises, naming the env var") {
-    for (bad <- Seq("0", "-4", "abc", "", "12.5")) {
+    for (bad <- Seq("0", "-4", "-3", "abc", "", "12.5", "1.5", "1e3")) {
       val e = intercept[IllegalArgumentException](
         Layout.buckets(spark, _ => Some(bad)))
       assert(e.getMessage.contains(Layout.EnvKnob), s"'$bad': ${e.getMessage}")
+      assert(e.getMessage.contains(s"'$bad'"), s"'$bad': ${e.getMessage}")
     }
   }
 

@@ -58,7 +58,8 @@ class PipelineOpsSpec extends SparkSpec {
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     val ex = intercept[Exception] {
-      spark.read.jdbc("jdbc:derby:/tmp/graft_no_such_db_here", "t", props).count()
+      spark.read.jdbc(s"jdbc:derby:${graft.model.Fs.path("no_such_db", Sf)}", "t", props)
+        .count()
     }
     assert(ex.getMessage != null)
   }

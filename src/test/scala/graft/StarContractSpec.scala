@@ -1,7 +1,18 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, FutureTask, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.operators.DedupOps
+
+/** Holds a task of the star loop's first checkpoint until released. */
+private object StarLatch {
+  val entered = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+}
 
 /** dd15's large-star/small-star contraction vs dd9's min-label
   * propagation: two independent algorithms, one fixpoint. */
@@ -63,5 +74,45 @@ class StarContractSpec extends SparkSpec {
     val byRoot = nodes.groupBy(find)
     val expect = byRoot.values.flatMap(ns => ns.map(_ -> ns.min)).toMap
     assert(viaStars == expect)
+  }
+
+  test("the narrowed loop runs at 8 partitions without touching the caller's width") {
+    // A task of the loop's first eager checkpoint blocks inside the
+    // narrowed call; meanwhile the caller's session must still read its
+    // own width, and that job must still carry the narrowed one.
+    val widths = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.sql.shuffle.partitions"))).foreach(widths.add)
+    }
+    val gate = udf { (x: Long) =>
+      StarLatch.entered.countDown()
+      StarLatch.release.await(120, TimeUnit.SECONDS)
+      x
+    }
+    // from an RDD: over a local relation the optimizer would evaluate
+    // the UDF on the driver, outside any job
+    import spark.implicits._
+    val pairs = spark.sparkContext.parallelize(Seq((1L, 2L), (2L, 3L), (7L, 8L)), 2)
+      .toDF("doc_a", "doc_b")
+      .withColumn("doc_a", gate(col("doc_a")))
+    spark.sparkContext.addSparkListener(listener)
+    val result = new FutureTask[Map[Long, Long]](() =>
+      DedupOps.starComponentsOf(pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    try {
+      new Thread(result, "star-components-under-latch").start()
+      try {
+        assert(StarLatch.entered.await(120, TimeUnit.SECONDS),
+          "the loop's first checkpoint never ran")
+        assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+        val deadline = System.nanoTime() + 30_000_000_000L
+        while (!widths.contains("8") && System.nanoTime() < deadline) Thread.sleep(50)
+        assert(widths.contains("8"), s"no job ran at the narrowed width: ${widths.asScala}")
+      } finally StarLatch.release.countDown()
+      assert(result.get(120, TimeUnit.SECONDS) ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
