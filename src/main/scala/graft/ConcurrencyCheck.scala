@@ -44,8 +44,10 @@ object ConcurrencyCheck {
   /** Queries in flight at once. */
   val Threads = 4
 
+  /** Width 6, not DedupOps' 8 or MonitorStream's 4: a leaked narrowed
+    * width must fail `conf_invariant`. */
   private def session(): SparkSession.Builder =
-    Session.builder("local[8]", 8, "cq_")
+    Session.builder("local[8]", 6, "cq_")
       .appName("graft-concurrency-check")
       .config("spark.scheduler.mode", "FAIR")
 

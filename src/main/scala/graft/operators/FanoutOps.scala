@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.OpModule
 import graft.model.Fs
-import graft.sources.{Cached, Sql, Tables}
+import graft.sources.{Sql, Tables}
 
 /** The unit of fan-out work (one tile) and its outcome — the Spark
   * incarnation of the reference's per-tile worker call
@@ -79,10 +79,10 @@ object FanoutOps extends OpModule {
     var finished: Dataset[WorkerResult] = s.emptyDataset[WorkerResult]
     var attempt = 1
     while (attempt <= maxAttempts && !pending.isEmpty) {
-      // persisted (held by Cached, so releaseAll frees it): res feeds the
-      // finished union, the pending semi join and the loop's isEmpty
-      // probe — without it the workers run again per consumer
-      val res = Cached.hold(s, runAttempt(s, pending, attempt))
+      // eager localCheckpoint, not persist: the workers run once per round
+      // for the union, the semi join and the isEmpty probe, and the result
+      // owns its rounds as checkpoint leaves, so the call caches nothing
+      val res = runAttempt(s, pending, attempt).localCheckpoint()
       val lastRound = attempt == maxAttempts
       finished = finished.union(res.filter(r => r.ok || lastRound))
       val failed = res.filter(!_.ok).toDF().select("tile_id")

@@ -290,7 +290,7 @@ object GraphOps extends OpModule {
     val t = "g6_edges_" + graft.model.Layout.dirKey(dir)
     // Build once per session (serving reality: build once, iterate
     // many — the bench measures ITERATION cost, not a rewrite per
-    // call). Cached holds the mark-only-after-success invariant.
+    // call). Cached keeps the mark-only-after-success invariant.
     Cached.once(s, t) {
       Tables.dropManaged(s, t)
       // |buckets| = Layout.buckets: explicit env knob, cluster cores as

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicLong
-
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.SparkContext
@@ -20,6 +18,8 @@ import org.apache.spark.storage.StorageLevel
   * the same value — the Spark analogue of the reference threading one
   * file index through its per-tile workers (tileconfig.py:395-499) — and
   * one [[releaseAll]] call frees everything deterministically.
+  * Only session-lived values belong here: a per-call loop materializes
+  * its rounds with an eager localCheckpoint and persists nothing.
   *
   * The session is its shared state: the catalog and the cache manager a
   * SparkSession shares with its `newSession()` clones. A session built
@@ -38,7 +38,6 @@ object Cached {
   }
 
   private val memo = TrieMap.empty[(AnyRef, String), Entry]
-  private val held = new AtomicLong(0L)
 
   /** `build`'s value per (session, key), built at most once. */
   def once[T](s: SparkSession, key: String)(build: => T): T = {
@@ -53,10 +52,6 @@ object Cached {
   /** Memoize `build` per (session, key), persisted. */
   def of(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     once(s, key)(build.persist(StorageLevel.MEMORY_AND_DISK))
-
-  /** Persist a relation of one call (a retry round), freed by [[releaseAll]]. */
-  def hold[T](s: SparkSession, ds: Dataset[T]): Dataset[T] =
-    once(s, s"held:${held.incrementAndGet()}")(ds.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Unpersist every relation and forget every entry (harness teardown).
     * Files stay until JVM exit ([[graft.model.Fs]]). */

@@ -19,10 +19,26 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("o3: retry pending set comes from a left_semi join, not a driver collect") {
-    val out = graft.operators.FanoutOps.runWithRetry(spark, maxAttempts = 2)
-    val plan = out.queryExecution.optimizedPlan.toString
-    assert(plan.contains("LeftSemi"),
-      s"expected a LeftSemi retry join in the plan:\n$plan")
+    // each round is checkpointed, so the returned plan holds checkpoint
+    // leaves: the join is in the plans the loop itself executes (its
+    // eager localCheckpoint and isEmpty actions). A fresh session's
+    // listener sees only this call's executions.
+    val s = spark.newSession()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    s.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(s"$funcName: ${qe.executedPlan}")
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    })
+    graft.operators.FanoutOps.runWithRetry(s, maxAttempts = 2)
+    def semi = plans.toArray.exists(_.toString.contains("LeftSemi"))
+    // the listener bus is async: poll, don't sleep a fixed interval
+    val deadline = System.nanoTime() + 15_000_000_000L
+    while (!semi && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(semi, s"expected a LeftSemi retry join among the loop's executed plans:\n" +
+      plans.toArray.mkString("\n"))
   }
 
   test("o8: Observation metrics ride along the fan-out job (run-report counters)") {

@@ -152,7 +152,7 @@ class SkewJoinSpec extends SparkSpec {
     // tradeEdges relation (orders⋈lineitem distinct, as g1–g7 use it)
     // against a node dimension and requires AQE to split the hub
     // partition at runtime.
-    val dir = "/tmp/graft_zipf_fixture"
+    val dir = graft.model.Fs.fixture("zipf_sf0.01")
     if (!new java.io.File(s"$dir/orders.parquet").exists())
       DataGen.generate(spark, 0.01, dir, heapsVocab = true, zipfKeys = true)
 
