@@ -6,13 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{Hash60, NfcNormalize, PointInPoly, PqArgmin, RectRelate, VectorDot}
 
-/** Production wiring for the engine's native extensions: a cluster user
-  * sets `spark.sql.extensions=graft.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`) and every session gets
-  * the codegen'd `vector_dot` as a first-class SQL function — no
-  * per-session registration code. The runtime fallback
-  * ([[VectorDot.register]]) stays for sessions built without the config;
-  * both paths bind the same Expression, so plans are identical.
+/** The engine's native SQL functions and optimizer rule, declared once.
+  * Every graft session gets them from [[Session.builder]]; a cluster
+  * user sets `spark.sql.extensions=graft.GraftExtensions`. This is the
+  * only registration path: a session built without it does not resolve
+  * `vector_dot`, `h60` or the spatial functions in SQL text. The Column
+  * API builds the same Expressions directly (`SimilarityOps.dot`,
+  * `DedupOps.h60`), never through the function registry.
   *
   * This is the SparkSessionExtensions slot the reference fills with its
   * plugin registry (tile_processor/controller.py:146-166): engine
@@ -54,8 +54,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the rectangle geometry model: ST_Relate / ST_Covers / the raw
     // DE-9IM matrix as SQL functions. Each expands at RESOLUTION time
     // into the same plain comparison tree RectRelate builds for the
-    // Column API — fully foldable/pushable/codegen'd, no UDF. Builders
-    // shared with the runtime fallback (RectRelate.register).
+    // Column API — fully foldable/pushable/codegen'd, no UDF.
     RectRelate.sqlFunctions.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),

@@ -38,8 +38,8 @@ object Parity {
     * complete afterwards) and clear the active and default sessions so
     * the next phase builds a fresh one. Returns the body's run and the
     * hook's value. A relation still cached after `Cached.releaseAll()`,
-    * or a session conf the body left changed, fails the run: leaks no
-    * fingerprint shows. */
+    * a session conf the body left changed, or a temp view it left on the
+    * session fails the run: leaks no fingerprint shows. */
   def phase[A](builder: SparkSession.Builder, hook: SparkSession => A)(
       body: (SparkSession, A) => Run): (Run, A) = {
     val spark = builder.getOrCreate()
@@ -47,15 +47,19 @@ object Parity {
     try {
       val a = hook(spark)
       val before = spark.conf.getAll
+      val viewsBefore = spark.sessionState.catalog.getTempViewNames().toSet
       val run = body(spark, a)
       graft.sources.Cached.releaseAll()
       val after = spark.conf.getAll
       val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+      val views = spark.sessionState.catalog.getTempViewNames().toSet
       val errs =
         (if (spark.sharedState.cacheManager.isEmpty) Map.empty[String, String]
          else Map("cache_invariant" -> "relations still cached after Cached.releaseAll()")) ++
         (if (changed.isEmpty) Map.empty[String, String]
-         else Map("conf_invariant" -> s"session conf changed: ${changed.toSeq.sorted.mkString(",")}"))
+         else Map("conf_invariant" -> s"session conf changed: ${changed.toSeq.sorted.mkString(",")}")) ++
+        (if (views == viewsBefore) Map.empty[String, String]
+         else Map("view_invariant" -> s"temp views changed: ${(views ++ viewsBefore -- (views intersect viewsBefore)).toSeq.sorted.mkString(",")}"))
       (run ++ Run(Map.empty, errs), a)
     } finally {
       graft.sources.Cached.releaseAll()

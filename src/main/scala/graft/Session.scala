@@ -66,6 +66,17 @@ object Session {
       c
     }
 
+  /** `text` run over temp `views` that `s` never sees: the views go on a
+    * per-call clone of `s`, the text is analyzed there and the result
+    * comes back on `s` with [[on]]. A view registered on `s` would outlive
+    * the call, and dropping it afterwards would pull it from under a
+    * concurrent call of the same query still analyzing against it. */
+  def sql(s: SparkSession, views: (String, DataFrame)*)(text: String): DataFrame = {
+    val c = ColumnBridge.cloneSession(s)
+    views.foreach { case (name, df) => on(c, df).createOrReplaceTempView(name) }
+    on(s, c.sql(text))
+  }
+
   /** `df`'s analyzed plan as a DataFrame of `target`. */
   def on(target: SparkSession, df: DataFrame): DataFrame =
     ColumnBridge.ofRows(target, df.queryExecution.analyzed)

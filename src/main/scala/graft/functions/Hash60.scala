@@ -40,12 +40,6 @@ case class Hash60(child: Expression) extends UnaryExpression {
 }
 
 object Hash60 {
-  /** Register `h60` in the session's function registry (idempotent) — the
-    * SQL front door to the portable content hash, so pasted-SQL dedup
-    * text binds the same codegen'd Expression the Column API uses. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    FnReg.ifAbsent(spark, "h60", exprs => Hash60(exprs.head))
-
   private val md5 = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")

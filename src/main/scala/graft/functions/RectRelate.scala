@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -164,12 +164,10 @@ object RectRelate {
   def covers(a: Rect, b: Rect): Column = inside(b, a)
 
   /** The SQL surface — `rect_de9im` / `st_relate_rect` / `st_covers_rect`
-    * builders shared by GraftExtensions (config-time injection) and
-    * [[register]] (runtime fallback for sessions built without the
-    * extensions config). Each expands at resolution time into the same
-    * comparison tree the Column API builds — no UDF, and the relate
-    * pattern must be a string literal (it parameterizes the expansion,
-    * it is not data). */
+    * builders, injected by GraftExtensions. Each expands at resolution
+    * time into the same comparison tree the Column API builds — no UDF,
+    * and the relate pattern must be a string literal (it parameterizes
+    * the expansion, it is not data). */
   val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
     def rects(es: Seq[Expression]): (Rect, Rect) = {
       val c = es.take(8).map(ColumnBridge.toColumn)
@@ -200,12 +198,4 @@ object RectRelate {
         ColumnBridge.toExpression(covers(a, b))
       })
   }
-
-  /** Runtime registration fallback (same pattern as VectorDot.register);
-    * the GraftExtensions path binds the identical builders. Idempotent
-    * ([[FnReg.ifAbsent]]) — called per query build. */
-  def register(spark: SparkSession): Unit =
-    sqlFunctions.foreach { case (name, builder) =>
-      FnReg.ifAbsent(spark, name, builder)
-    }
 }

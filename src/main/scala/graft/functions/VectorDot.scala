@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Codegen'd dot product of two array<double> columns.
@@ -64,16 +62,4 @@ case class VectorDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VectorDot =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorDot {
-  /** Register `vector_dot` in the session's function registry (idempotent)
-    * and return a Column-building helper. */
-  def register(spark: SparkSession): Unit =
-    FnReg.ifAbsent(spark, "vector_dot", exprs => VectorDot(exprs(0), exprs(1)))
-
-  def dot(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    expr(s"vector_dot($a, $b)")
-  }
 }

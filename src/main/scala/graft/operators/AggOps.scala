@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.OpModule
+import graft.{OpModule, Session}
 import graft.functions.{Envelope, EnvelopeUnion}
 import graft.sources.{Sql, Tables}
 
@@ -365,9 +365,8 @@ object AggOps extends OpModule {
     // combinations (Spark expands sets into a single Expand + partial
     // aggregation, not one scan per set). GROUPING() markers disambiguate
     // "NULL key" from "aggregated-away key" on both engines.
-    "a15_grouping_sets" -> ((s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders_gs")
-      s.sql(
+    "a15_grouping_sets" -> ((s, dir) =>
+      Session.sql(s, "orders_gs" -> Tables.orders(s, dir))(
         """SELECT o_orderstatus, o_orderpriority,
           |       CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
           |       CAST(GROUPING(o_orderpriority) AS INT) AS g_priority,
@@ -376,8 +375,7 @@ object AggOps extends OpModule {
           |            AS DOUBLE) AS revenue
           |FROM orders_gs
           |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-          |                        (o_orderstatus), (o_orderpriority), ())""".stripMargin)
-    }),
+          |                        (o_orderstatus), (o_orderpriority), ())""".stripMargin)),
 
     // W10 (extension) — inter-event gap percentiles: time since the
     // user's previous activity, summarized per arriving event type (the

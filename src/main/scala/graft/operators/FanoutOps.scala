@@ -41,20 +41,12 @@ object FanoutOps extends OpModule {
     Tables.boundaries(s).select("tile_id", "tx", "ty").as[TileTask]
   }
 
-  /** O1: one worker call per tile via mapPartitions (the
-    * ThreadPoolExecutor fan-out of processor.py:127-149). */
-  def runAttempt(s: SparkSession, tiles: Dataset[TileTask], attempt: Int): Dataset[WorkerResult] = {
-    import s.implicits._
-    tiles.mapPartitions(_.map(t =>
-      WorkerResult(t.tile_id, workerSucceeds(t, attempt), attempt)))
-  }
-
-  /** Fan-out over an ARBITRARY worker function with exception capture: a
-    * worker that throws marks ITS tile failed instead of failing the
-    * Spark task (and with it every tile in the partition) — the
-    * reference wraps each future the same way
-    * (processor.py:106-123, test_processor.py:45-57). */
-  def runAttemptSafe(s: SparkSession, tiles: Dataset[TileTask], attempt: Int)(
+  /** O1: one `work` call per tile via mapPartitions (the
+    * ThreadPoolExecutor fan-out of processor.py:127-149). A worker that
+    * throws marks ITS tile failed instead of failing the Spark task (and
+    * with it every tile in the partition) — the reference wraps each
+    * future the same way (processor.py:106-123, test_processor.py:45-57). */
+  def runAttempt(s: SparkSession, tiles: Dataset[TileTask], attempt: Int)(
       work: (TileTask, Int) => Boolean): Dataset[WorkerResult] = {
     import s.implicits._
     tiles.mapPartitions(_.map(t =>
@@ -82,7 +74,7 @@ object FanoutOps extends OpModule {
       // eager localCheckpoint, not persist: the workers run once per round
       // for the union, the semi join and the isEmpty probe, and the result
       // owns its rounds as checkpoint leaves, so the call caches nothing
-      val res = runAttempt(s, pending, attempt).localCheckpoint()
+      val res = runAttempt(s, pending, attempt)(workerSucceeds).localCheckpoint()
       val lastRound = attempt == maxAttempts
       finished = finished.union(res.filter(r => r.ok || lastRound))
       val failed = res.filter(!_.ok).toDF().select("tile_id")
@@ -95,7 +87,7 @@ object FanoutOps extends OpModule {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O1 — parallel fan-out map, single attempt
     "o1_fanout_workers" -> ((s, _) =>
-      runAttempt(s, tileTasks(s), attempt = 2).toDF()
+      runAttempt(s, tileTasks(s), attempt = 2)(workerSucceeds).toDF()
         .select("tile_id", "ok")),
 
     // O2 — per-tile external process via RDD pipe (run_subprocess,

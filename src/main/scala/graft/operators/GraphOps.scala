@@ -234,8 +234,6 @@ object GraphOps extends OpModule {
     // integer-mass shape survives Spark's SQL parser/optimizer
     // unchanged. Must produce exactly g1's result.
     "v4_sql_pagerank" -> ((s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
       // SHUFFLE_HASH on the rank/degree sides: they are NODE-proportional
       // relations, and without the hint Catalyst happily broadcasts them
       // once stats look small — which materializes a data-proportional
@@ -250,7 +248,8 @@ object GraphOps extends OpModule {
            |       $Teleport + (85 * SUM(CAST(p.pr div d.deg AS DECIMAL(38,0)))) div 100 AS pr
            |FROM edges e JOIN $prev p ON e.src = p.node JOIN deg d ON e.src = d.node
            |GROUP BY e.dst)""".stripMargin
-      s.sql(
+      Session.sql(s, "orders_v" -> Tables.orders(s, dir),
+          "lineitem_v" -> Tables.lineitem(s, dir))(
         // MERGE on the fact-fact foundation join: orders is a FACT table,
       // and un-hinted Catalyst broadcast it (1.5M rows hashed on the
       // driver) — worse, the un-persisted CTE chain re-inlines e0 into

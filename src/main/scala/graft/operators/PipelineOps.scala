@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.OpModule
+import graft.{OpModule, Session}
 import graft.model.TileGrid
 import graft.sources.{Sql, Tables}
 
@@ -44,8 +44,7 @@ object PipelineOps extends OpModule {
     // the same text-form queries against the same relations
     "v1_sql_frontend" -> ((s, _) => {
       import TileGrid._
-      Tables.boundaries(s).createOrReplaceTempView("boundaries_v")
-      s.sql(
+      Session.sql(s, "boundaries_v" -> Tables.boundaries(s))(
         s"""SELECT tile_id FROM boundaries_v
            |WHERE xmin <= $ExtentXMax AND xmax >= $ExtentXMin
            |  AND ymin <= $ExtentYMax AND ymax >= $ExtentYMin""".stripMargin)
@@ -58,10 +57,8 @@ object PipelineOps extends OpModule {
     // Must produce exactly j4_relate_coverage's rows.
     "v2_sql_relate" -> ((s, _) => {
       import s.implicits._
-      graft.functions.RectRelate.register(s)
-      Tables.boundaries(s).createOrReplaceTempView("boundaries_v")
-      TileGrid.uTiles.toDF().createOrReplaceTempView("u_tiles_v")
-      s.sql(
+      Session.sql(s, "boundaries_v" -> Tables.boundaries(s),
+          "u_tiles_v" -> TileGrid.uTiles.toDF())(
         """WITH vcov AS (
           |  SELECT version AS v, MIN(xmin) AS uxmin, MIN(ymin) AS uymin,
           |         MAX(xmax) AS uxmax, MAX(ymax) AS uymax
@@ -82,20 +79,17 @@ object PipelineOps extends OpModule {
     }),
 
     // dd1's exact-dedup semantics pasted AS SQL through the injected
-    // `h60` function (GraftExtensions / Hash60.register): the portable
-    // content hash is a first-class SQL citizen, so a user's dedup
-    // query TEXT runs unchanged — and binds the same codegen'd
+    // `h60` function GraftExtensions injects at session build: the
+    // portable content hash is a first-class SQL citizen, so a user's
+    // dedup query TEXT runs unchanged — and binds the same codegen'd
     // Expression the Column API uses (equality pinned in PropertySpec).
-    "v3_sql_dedup" -> ((s, dir) => {
-      graft.functions.Hash60.register(s)
-      Tables.documents(s, dir).createOrReplaceTempView("documents_v3")
-      s.sql(
+    "v3_sql_dedup" -> ((s, dir) =>
+      Session.sql(s, "documents_v3" -> Tables.documents(s, dir))(
         """SELECT lang, COUNT(*) AS n_docs,
           |       COUNT(DISTINCT h60(concat('v3:', text))) AS n_distinct
           |FROM documents_v3
           |GROUP BY lang
-          |ORDER BY lang""".stripMargin)
-    }),
+          |ORDER BY lang""".stripMargin)),
 
     // V5 (extension) — the as-of join through the SQL FRONT DOOR: w6's
     // union-window formulation as pasteable Spark SQL (window `last(x,
@@ -104,9 +98,8 @@ object PipelineOps extends OpModule {
     // same oracle as w6 (DuckDB's native ASOF LEFT JOIN), so all THREE
     // routes (Column API, Spark SQL text, DuckDB ASOF) must agree row
     // for row.
-    "v5_sql_asof" -> ((s, dir) => {
-      Tables.events(s, dir).createOrReplaceTempView("events_v5")
-      s.sql(
+    "v5_sql_asof" -> ((s, dir) =>
+      Session.sql(s, "events_v5" -> Tables.events(s, dir))(
         """WITH clicks0 AS (
           |  SELECT user_id, ts, MAX(event_id) AS c_event_id
           |  FROM events_v5 WHERE event_type = 'click' GROUP BY user_id, ts),
@@ -128,8 +121,7 @@ object PipelineOps extends OpModule {
           |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m_val
           |      FROM u)
           |SELECT p_event_id, user_id, m_id AS c_event_id, m_val AS c_value
-          |FROM m WHERE tag = 1""".stripMargin)
-    }),
+          |FROM m WHERE tag = 1""".stripMargin)),
 
     // as-of join (beyond-reference training-pipeline op): each purchase
     // matched to the user's most recent prior-or-simultaneous click.

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.OpModule
+import graft.{OpModule, Session}
+import graft.functions.VectorDot
 import graft.sources.{Cached, Sql, Tables}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -22,10 +24,8 @@ import graft.sources.{Cached, Sql, Tables}
 object SimilarityOps extends OpModule {
 
   /** embeddings with a double-typed vector column `emb`. */
-  def emb(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorDot.register(s)
+  def emb(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
-  }
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> cast(x as double))").as("emb"))
 
@@ -53,9 +53,10 @@ object SimilarityOps extends OpModule {
   /** Sequential dot product of two array<double> columns — the codegen'd
     * [[graft.functions.VectorDot]] expression (bit-identical to the
     * interpreted `aggregate(zip_with(...))` fold, ~10x less per-row
-    * overhead). Registration happens in each query fn. */
-  def dot(a: String, b: String): org.apache.spark.sql.Column =
-    expr(s"vector_dot($a, $b)")
+    * overhead), built directly as `DedupOps.h60` builds Hash60. */
+  def dot(a: String, b: String): Column =
+    ColumnBridge.toColumn(
+      VectorDot(ColumnBridge.toExpression(col(a)), ColumnBridge.toExpression(col(b))))
 
   /** The IVF coarse-probe relation shared by nn4 and nn15: the fixture
     * query vector (vec_id 0) paired with its nearest centroid's list
@@ -221,13 +222,11 @@ object SimilarityOps extends OpModule {
     }),
 
     // nn5 — the SQL FRONT DOOR for similarity: vector_dot is callable
-    // from plain spark.sql because it is a registered native function
-    // (GraftExtensions at session build, VectorDot.register as runtime
-    // fallback inside emb()). Same scoring as nn1 around a different
-    // query vector, so the two paths cross-check each other.
-    "nn5_sql_vecdot" -> ((s, dir) => {
-      emb(s, dir).createOrReplaceTempView("emb_v")
-      s.sql(
+    // from plain spark.sql because GraftExtensions injects it as a
+    // native function at session build. Same scoring as nn1 around a
+    // different query vector, so the two paths cross-check each other.
+    "nn5_sql_vecdot" -> ((s, dir) =>
+      Session.sql(s, "emb_v" -> emb(s, dir))(
         """SELECT e.vec_id,
           |       ROUND(vector_dot(e.emb, q.qe) /
           |         (sqrt(vector_dot(e.emb, e.emb)) * sqrt(vector_dot(q.qe, q.qe))), 6) AS cos
@@ -236,8 +235,7 @@ object SimilarityOps extends OpModule {
           |ORDER BY vector_dot(e.emb, q.qe) /
           |  (sqrt(vector_dot(e.emb, e.emb)) * sqrt(vector_dot(q.qe, q.qe)))
           |  DESC, e.vec_id
-          |LIMIT 10""".stripMargin)
-    }),
+          |LIMIT 10""".stripMargin)),
 
     // nn9 — INT8 EMBEDDING QUANTIZATION: per-dimension min/max scalar
     // quantization to 8 bits with a reconstruction-error report (the 4×

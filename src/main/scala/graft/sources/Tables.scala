@@ -16,8 +16,23 @@ import graft.model.TileGrid
   * from the big fact tables so all filters still push down to parquet.
   */
 object Tables {
+  /** `<dir>/<name>.parquet`, timestamps normalized ([[normalizeTs]]). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    ParquetSource(dir).read(spark, name)
+    normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+
+  /** The harness parquet has shipped timestamps as TIMESTAMP(NANOS),
+    * TIMESTAMP(MICROS, adjustedToUTC) and TIMESTAMP(MICROS) NTZ across
+    * regenerations. Our sessions pin
+    * spark.sql.parquet.inferTimestampNTZ.enabled=false so NTZ columns scan
+    * directly as TimestampType (keeping ts predicates pushable — a cast
+    * wrapper would defeat parquet filter pushdown); this fallback covers
+    * foreign sessions without that conf, where `withWatermark` and
+    * `unix_micros` would otherwise reject TIMESTAMP_NTZ. Under the pinned
+    * UTC session timezone the cast is value-identity. */
+  def normalizeTs(df: DataFrame): DataFrame =
+    df.schema.fields.collect {
+      case f if f.dataType == org.apache.spark.sql.types.TimestampNTZType => f.name
+    }.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("timestamp")))
 
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")

@@ -6,7 +6,8 @@ package graft
   * JVM holds one SparkContext and the sibling suites share a live
   * session). Launches a graft main through [[Jvm.command]] (JDK opens +
   * this JVM's classpath, 8 GiB heap), drains stdout, tails stderr to a
-  * temp file (a pipe would deadlock under Spark's log volume), and
+  * file under [[graft.model.Fs.root]] (a pipe would deadlock under
+  * Spark's log volume), and
   * returns the last line carrying the expected metric. */
 object GateLauncher {
   final case class GateRun(exit: Int, line: String)
@@ -20,8 +21,7 @@ object GateLauncher {
     // stderr to a file, not a pipe: Spark logs megabytes there, and a
     // full 64K pipe buffer would deadlock the child while this thread
     // blocks reading stdout
-    val errFile = java.io.File.createTempFile("graft_gate", ".err")
-    errFile.deleteOnExit()
+    val errFile = java.io.File.createTempFile("graft_gate", ".err", graft.model.Fs.root)
     pb.redirectError(errFile)
     val proc = pb.start()
     val out = new String(proc.getInputStream.readAllBytes(),

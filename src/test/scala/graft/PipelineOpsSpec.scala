@@ -48,7 +48,8 @@ class PipelineOpsSpec extends SparkSpec {
     import org.apache.spark.sql.Observation
     val obs = Observation("graft_run_report")
     val res = graft.operators.FanoutOps
-      .runAttempt(spark, graft.operators.FanoutOps.tileTasks(spark), attempt = 2)
+      .runAttempt(spark, graft.operators.FanoutOps.tileTasks(spark), attempt = 2)(
+        graft.operators.FanoutOps.workerSucceeds)
       .toDF()
       .observe(obs, count(lit(1)).as("n_tiles"),
         sum(when(col("ok"), 1).otherwise(0)).as("n_ok"))
@@ -61,7 +62,7 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("o1: a throwing worker fails its own tile, not the whole job (processor exception capture)") {
-    val res = graft.operators.FanoutOps.runAttemptSafe(
+    val res = graft.operators.FanoutOps.runAttempt(
       spark, graft.operators.FanoutOps.tileTasks(spark), attempt = 1) { (t, _) =>
         if (t.tile_id == "t2_2") throw new RuntimeException("worker crashed")
         true

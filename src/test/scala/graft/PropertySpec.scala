@@ -254,86 +254,68 @@ class PropertySpec extends SparkSpec {
     }
 
   test("ArraysOverlapRewrite: rewritten ≡ unrewritten on generated arrays; the nullable-element guard is load-bearing") {
-    import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.types.ArrayType
-    // the rule applies at session build (ExtensionsSpec pattern): a fresh
-    // session with GraftExtensions, restored afterwards
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions()(_))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "overlap_prop").toString
+    // the rule is injected at session build; the shared session has it
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "overlap_prop").toString
 
-      // ---- non-nullable elements: the rule FIRES; results must equal
-      // both the un-matched spelling (>= 1, same predicate, outside the
-      // rule's pattern) and a Scala set model — including NULL arrays and
-      // empty arrays on either side. Parquet-backed so
-      // ConvertToLocalRelation cannot constant-fold the predicate away.
-      val genArr: Gen[Option[List[Int]]] = Gen.frequency(
-        1 -> Gen.const(None),      // NULL array
-        1 -> Gen.const(Some(Nil)), // empty array
-        8 -> Gen.choose(1, 6).flatMap(n =>
-          Gen.listOfN(n, Gen.choose(0, 9)).map(l => Some(l))))
-      val rows = samples(Gen.zip(genArr, genArr), 300)
-      rows.toDF("a", "b").write.mode("overwrite").parquet(s"$dir/nonnull")
-      val base = s.read.parquet(s"$dir/nonnull")
-      // parquet read-back declares nullable elements; coalesce inside a
-      // transform proves non-nullability to the optimizer (identity on
-      // this data — part A generates no null elements)
-      def nn(c: String) = transform(col(c), x => coalesce(x, lit(0)))
-      val df = base.select(col("a"), col("b"),
-        (size(array_intersect(nn("a"), nn("b"))) > 0).as("rewritten"),
-        (size(array_intersect(nn("a"), nn("b"))) >= 1).as("unrewritten"))
-      val opt = df.queryExecution.optimizedPlan.toString
-      assert(opt.contains("arrays_overlap"), opt) // the > 0 spelling rewrote
-      df.collect().foreach { r =>
-        val model: Any =
-          if (r.isNullAt(0) || r.isNullAt(1)) null
-          else java.lang.Boolean.valueOf(
-            r.getSeq[Int](0).toSet.intersect(r.getSeq[Int](1).toSet).nonEmpty)
-        def b(i: Int): Any =
-          if (r.isNullAt(i)) null else java.lang.Boolean.valueOf(r.getBoolean(i))
-        assert(b(2) == model && b(3) == model,
-          s"a=${r.get(0)} b=${r.get(1)} rewritten=${b(2)} unrewritten=${b(3)} model=$model")
-      }
-
-      // ---- nullable elements: the guard BLOCKS the rule, and must —
-      // generated data includes the divergent shape (null element on one
-      // side, disjoint other side) where overlap yields NULL but the
-      // size-form yields false
-      val genElem: Gen[Option[Int]] =
-        Gen.frequency(3 -> Gen.choose(0, 9).map(v => Some(v)), 1 -> Gen.const(None))
-      val genArrN: Gen[Option[List[Option[Int]]]] = Gen.frequency(
-        1 -> Gen.const(None), 1 -> Gen.const(Some(Nil)),
-        8 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, genElem).map(l => Some(l))))
-      val rowsN = samples(Gen.zip(genArrN, genArrN), 300) :+
-        ((Some(List(Option.empty[Int])), Some(List(Option(1))))) // known divergent pair
-      rowsN.toDF("a", "b").write.mode("overwrite").parquet(s"$dir/nullable")
-      val baseN = s.read.parquet(s"$dir/nullable")
-      assert(baseN.schema("a").dataType.asInstanceOf[ArrayType].containsNull)
-      val dfN = baseN.select(
-        expr("size(array_intersect(a, b)) > 0").as("sz"),
-        expr("arrays_overlap(a, b)").as("ov"))
-      assert(dfN.queryExecution.optimizedPlan.toString.contains("array_intersect"),
-        dfN.queryExecution.optimizedPlan.toString) // size-form survived unrewritten
-      // the guard is NECESSARY: the two forms really diverge here
-      assert(dfN.filter(col("sz").isNotNull && col("ov").isNull).count() > 0)
-      // and wherever overlap is defined, they agree
-      assert(dfN.filter(col("ov").isNotNull && !(col("sz") <=> col("ov"))).count() == 0)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+    // ---- non-nullable elements: the rule FIRES; results must equal
+    // both the un-matched spelling (>= 1, same predicate, outside the
+    // rule's pattern) and a Scala set model — including NULL arrays and
+    // empty arrays on either side. Parquet-backed so
+    // ConvertToLocalRelation cannot constant-fold the predicate away.
+    val genArr: Gen[Option[List[Int]]] = Gen.frequency(
+      1 -> Gen.const(None),      // NULL array
+      1 -> Gen.const(Some(Nil)), // empty array
+      8 -> Gen.choose(1, 6).flatMap(n =>
+        Gen.listOfN(n, Gen.choose(0, 9)).map(l => Some(l))))
+    val rows = samples(Gen.zip(genArr, genArr), 300)
+    rows.toDF("a", "b").write.mode("overwrite").parquet(s"$dir/nonnull")
+    val base = spark.read.parquet(s"$dir/nonnull")
+    // parquet read-back declares nullable elements; coalesce inside a
+    // transform proves non-nullability to the optimizer (identity on
+    // this data — part A generates no null elements)
+    def nn(c: String) = transform(col(c), x => coalesce(x, lit(0)))
+    val df = base.select(col("a"), col("b"),
+      (size(array_intersect(nn("a"), nn("b"))) > 0).as("rewritten"),
+      (size(array_intersect(nn("a"), nn("b"))) >= 1).as("unrewritten"))
+    val opt = df.queryExecution.optimizedPlan.toString
+    assert(opt.contains("arrays_overlap"), opt) // the > 0 spelling rewrote
+    df.collect().foreach { r =>
+      val model: Any =
+        if (r.isNullAt(0) || r.isNullAt(1)) null
+        else java.lang.Boolean.valueOf(
+          r.getSeq[Int](0).toSet.intersect(r.getSeq[Int](1).toSet).nonEmpty)
+      def b(i: Int): Any =
+        if (r.isNullAt(i)) null else java.lang.Boolean.valueOf(r.getBoolean(i))
+      assert(b(2) == model && b(3) == model,
+        s"a=${r.get(0)} b=${r.get(1)} rewritten=${b(2)} unrewritten=${b(3)} model=$model")
     }
+
+    // ---- nullable elements: the guard BLOCKS the rule, and must —
+    // generated data includes the divergent shape (null element on one
+    // side, disjoint other side) where overlap yields NULL but the
+    // size-form yields false
+    val genElem: Gen[Option[Int]] =
+      Gen.frequency(3 -> Gen.choose(0, 9).map(v => Some(v)), 1 -> Gen.const(None))
+    val genArrN: Gen[Option[List[Option[Int]]]] = Gen.frequency(
+      1 -> Gen.const(None), 1 -> Gen.const(Some(Nil)),
+      8 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, genElem).map(l => Some(l))))
+    val rowsN = samples(Gen.zip(genArrN, genArrN), 300) :+
+      ((Some(List(Option.empty[Int])), Some(List(Option(1))))) // known divergent pair
+    rowsN.toDF("a", "b").write.mode("overwrite").parquet(s"$dir/nullable")
+    val baseN = spark.read.parquet(s"$dir/nullable")
+    assert(baseN.schema("a").dataType.asInstanceOf[ArrayType].containsNull)
+    val dfN = baseN.select(
+      expr("size(array_intersect(a, b)) > 0").as("sz"),
+      expr("arrays_overlap(a, b)").as("ov"))
+    assert(dfN.queryExecution.optimizedPlan.toString.contains("array_intersect"),
+      dfN.queryExecution.optimizedPlan.toString) // size-form survived unrewritten
+    // the guard is NECESSARY: the two forms really diverge here
+    assert(dfN.filter(col("sz").isNotNull && col("ov").isNull).count() > 0)
+    // and wherever overlap is defined, they agree
+    assert(dfN.filter(col("ov").isNotNull && !(col("sz") <=> col("ov"))).count() == 0)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("A8 priority dedup matches the pure model on generated file indexes") {

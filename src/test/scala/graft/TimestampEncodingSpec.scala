@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
-import graft.sources.{ParquetSource, Tables}
+import graft.sources.Tables
 
 /** Pins the timestamp-encoding contract against fixture regeneration drift.
   *
@@ -15,7 +15,7 @@ import graft.sources.{ParquetSource, Tables}
   * the 8 watermark/unix_micros queries in the round-9 driver run while
   * every date_trunc/window query sailed through. The rule these tests pin:
   * every session sets spark.sql.parquet.inferTimestampNTZ.enabled=false,
-  * and [[ParquetSource.normalizeTs]] covers sessions without the conf.
+  * and [[Tables.normalizeTs]] covers sessions without the conf.
   */
 class TimestampEncodingSpec extends SparkSpec {
 
@@ -32,7 +32,7 @@ class TimestampEncodingSpec extends SparkSpec {
       expr("to_timestamp_ntz('2024-03-01 12:34:56') + make_interval(0,0,0,0,0,0,id)")
         .as("ts"))
     assert(ntz.schema("ts").dataType == TimestampNTZType)
-    val fixed = ParquetSource.normalizeTs(ntz)
+    val fixed = Tables.normalizeTs(ntz)
     assert(fixed.schema("ts").dataType == TimestampType)
     val micros = fixed.select(unix_micros(col("ts"))).collect().map(_.getLong(0))
     assert(micros.head == 1709296496000000L && micros.length == 3)

@@ -125,7 +125,7 @@ class TpchShapeSpec extends SparkSpec {
   }
 
   test("tx16 golden: hand-computed add-one bigram scores on a 3-doc corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("tx16golden").toString
+    val dir = java.nio.file.Files.createTempDirectory(graft.model.Fs.root.toPath, "tx16golden").toString
     import spark.implicits._
     Seq((0L, "a b a b", "en", "src0", 7L),
         (1L, "a b", "en", "src0", 3L),
